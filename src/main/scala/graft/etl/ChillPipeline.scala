@@ -61,17 +61,33 @@ object ChillPipeline {
     */
   def rawCsv(spark: SparkSession, path: String, delimiter: String,
              columns: Seq[String], skipHeader: Int, skipFooter: Int,
-             ignoreLines: Set[String]): DataFrame = {
+             ignoreLines: Set[String]): DataFrame =
+    rawCsvFrom(spark, path, textLines(spark, path), delimiter, columns,
+      skipHeader, skipFooter, ignoreLines)
+
+  /** [[rawCsv]] over the [[textLines]] of `path` the caller already
+    * holds — so a caller that also derives tag columns from the same
+    * lines ([[withTagColumnsFrom]]) lists the files once, not twice.
+    */
+  def rawCsvFrom(spark: SparkSession, path: String, lines: DataFrame, delimiter: String,
+                 columns: Seq[String], skipHeader: Int, skipFooter: Int,
+                 ignoreLines: Set[String]): DataFrame = {
     // empty columns = derive them from the feed's own header line,
     // the reference's read_csv default (header inside the slice);
     // the body parse then starts one line later
     val (cols, skip) =
       if (columns.nonEmpty) (columns, skipHeader)
       else (headerColumns(spark, path, delimiter, skipHeader, ignoreLines), skipHeader + 1)
-    sliceLines(
-      spark.read.text(path).select(input_file_name().as("_file"), col("value")),
-      delimiter, cols, skip, skipFooter, ignoreLines)
+    sliceLines(lines, delimiter, cols, skip, skipFooter, ignoreLines)
   }
+
+  /** The `(_file, value)` line set of the text files under `path`.
+    * Building it lists the files (a Spark job once a glob matches more
+    * than `parallelPartitionDiscovery.threshold` paths); every frame
+    * derived from it reuses that listing.
+    */
+  def textLines(spark: SparkSession, path: String): DataFrame =
+    spark.read.text(path).select(input_file_name().as("_file"), col("value"))
 
   /** Raw column names from the feed itself — the reference's
     * `pd.read_csv(stream, sep=delimiter)` semantics (Partrans.py:
@@ -301,9 +317,7 @@ object ChillPipeline {
     */
   def withTagColumns(spark: SparkSession, path: String, df: DataFrame,
                      tagRules: Seq[FromTag]): DataFrame =
-    withTagColumnsFrom(
-      spark.read.text(path).select(input_file_name().as("_file"), col("value")),
-      df, tagRules)
+    withTagColumnsFrom(textLines(spark, path), df, tagRules)
 
   /** [[withTagColumns]] over an existing `(_file, value)` line set. */
   def withTagColumnsFrom(lines: DataFrame, df: DataFrame,

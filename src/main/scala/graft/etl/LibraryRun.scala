@@ -2,8 +2,9 @@ package graft.etl
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
-import graft.operators.{Maintenance, Reconcile, Report}
+import graft.operators.{Maintenance, Report}
 
 /** The reference's whole library test cycle (chill.py:45-227) as one
   * Spark flow: parse raw data → field rules → route to tables →
@@ -13,7 +14,7 @@ import graft.operators.{Maintenance, Reconcile, Report}
   * What the reference does with an Oracle DB, daemon processes, and
   * sleep/poll loops is here a deterministic DAG: the "DB" is a
   * partitioned parquet warehouse, the "DBLoader" is dynamic partition
-  * overwrite, and the comparison is a set of co-partitioned joins.
+  * overwrite, and the comparison is one keyed aggregate per table.
   */
 final case class LibraryConfig(
     rawPath: String,
@@ -38,89 +39,108 @@ object LibraryRun {
 
   /** Execute the full cycle. `keyCols` are the reconciliation keys
     * (the reference's CONF_KEY_FIELDS + DATETIME).
+    *
+    * The raw files are listed once: one `(_file, value)` line set
+    * feeds both the line slice and the tag columns. Each routed table
+    * is compared by ONE [[Report.compareData]] call — a single keyed
+    * aggregate of expected vs loaded rows, persisted alongside the
+    * transformed feed, from which every count, missing-key and
+    * summary case and the value diffs of keys with one row per side
+    * derive (duplicated keys alone go through a row-level join), plus
+    * one flag aggregate for all its referential legs — and the merged
+    * report renders with the single collect of [[Report.toJunitXml]]. Jobs carry the description
+    * `LibraryRun parse`, `LibraryRun load <table>`, `LibraryRun
+    * readback` or `LibraryRun report`; the caller's description is
+    * restored on return.
     */
   def run(spark: SparkSession, cfg: LibraryConfig, keyCols: Seq[String]): LibraryResult = {
-    // 1. parse + transform (Partrans.parse_data), ONCE: the reference
-    // parses each file once and accumulates per-table frames
-    // (Partrans.py:356-364). Spark-first that is a persisted
-    // transformed feed — every route's write (its own action) and
-    // every reconcile suite fans out from the cache instead of
-    // re-parsing the raw text. MEMORY_AND_DISK: a huge batch spills
-    // to local disk rather than evicting (a re-parse costs far more
-    // than a disk read of the parsed columns).
-    val raw = ChillPipeline.rawCsv(spark, cfg.rawPath, cfg.delimiter, cfg.rawColumns,
-      cfg.skipHeader, cfg.skipFooter, cfg.ignoreLines)
-    val tagged = ChillPipeline.withTagColumns(spark, cfg.rawPath, raw, cfg.tagRules)
-    val transformed = FieldRule.applyAll(tagged, cfg.rules)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val sc = spark.sparkContext
+    // the property sc.setJobDescription sets (SparkContext's key is private)
+    val callerDescription = sc.getLocalProperty("spark.job.description")
+    def phase(name: String): Unit = sc.setJobDescription(s"LibraryRun $name")
     try {
-      val routed = ChillPipeline.route(transformed, cfg.routes)
+      // 1. parse + transform (Partrans.parse_data), ONCE: the reference
+      // parses each file once and accumulates per-table frames
+      // (Partrans.py:356-364). Spark-first that is a persisted
+      // transformed feed — every route's write (its own action) and
+      // every reconcile suite fans out from the cache instead of
+      // re-parsing the raw text. MEMORY_AND_DISK: a huge batch spills
+      // to local disk rather than evicting (a re-parse costs far more
+      // than a disk read of the parsed columns).
+      phase("parse")
+      val lines = ChillPipeline.textLines(spark, cfg.rawPath)
+      val raw = ChillPipeline.rawCsvFrom(spark, cfg.rawPath, lines, cfg.delimiter,
+        cfg.rawColumns, cfg.skipHeader, cfg.skipFooter, cfg.ignoreLines)
+      val tagged = ChillPipeline.withTagColumnsFrom(lines, raw, cfg.tagRules)
+      val transformed = FieldRule.applyAll(tagged, cfg.rules)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      val keyedFrames = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
+      try {
+        val routed = ChillPipeline.route(transformed, cfg.routes)
 
-      // 2. load: per-table dynamic partition overwrite (delete+reload)
-      routed.foreach { case (table, df) =>
-        Maintenance.overwritePartitions(df, s"${cfg.warehouseDir}/$table", cfg.partitionCol)
+        // 2. load: per-table dynamic partition overwrite (delete+reload)
+        routed.foreach { case (table, df) =>
+          phase(s"load $table")
+          Maintenance.overwritePartitions(df, s"${cfg.warehouseDir}/$table", cfg.partitionCol)
+        }
+
+        // 3. read back what the warehouse now holds
+        phase("readback")
+        val loaded = routed.map { case (table, df) =>
+          table -> readBack(spark, s"${cfg.warehouseDir}/$table", df.schema, cfg.partitionCol)
+        }
+
+        // 4. reconcile per table — the reference's FULL compare_data
+        // check set (HlxTools.py:785-936): record counts, missing keys
+        // both directions, per-counter value diffs (numeric-else-string,
+        // rounded to 3), fact→dimension referential integrity vs the
+        // config's lookup views, and the missing-column schema compare.
+        // Counter columns come from the route spec (the HLD column list
+        // minus keys — TYPE=KPI post-rule columns are excluded the way
+        // the reference filters TYPE!='KPI').
+        phase("report")
+        val lookups = cfg.rules.collect { case l: Lookup => (l.name, l.view, l.keys) }
+        val report = Report.merge(routed.keys.toSeq.sorted.map { table =>
+          val spec = cfg.routes.find(_.table == table).get
+          val counters = spec.columns
+            .filterNot(c => keyCols.contains(c) || c == cfg.partitionCol)
+          val compared = Report.compareData(table, routed(table), loaded(table), keyCols,
+            counters, spec.columns ++ spec.postRules.map(_.name), lookups)
+          keyedFrames += compared.keyed
+          compared.report
+        }: _*)
+        // toJunitXml collects, so the report materializes from the
+        // caches before the unpersists below; the returned DataFrames
+        // (parquet-backed or recomputable) stay valid after them
+        LibraryResult(loaded, report, Report.toJunitXml(report))
+      } finally {
+        keyedFrames.foreach(_.unpersist())
+        transformed.unpersist()
       }
+    } finally sc.setJobDescription(callerDescription)
+  }
 
-      // 3. read back what the warehouse now holds
-      val loaded = routed.keys.map { table =>
-        table -> spark.read.parquet(s"${cfg.warehouseDir}/$table")
-      }.toMap
-
-      // 4. reconcile per table — the reference's FULL compare_data
-      // check set (HlxTools.py:785-936): record counts, missing keys
-      // both directions, per-counter value diffs (numeric-else-string,
-      // rounded to 3), fact→dimension referential integrity vs the
-      // config's lookup views, and the missing-column schema compare.
-      // Counter columns come from the route spec (the HLD column list
-      // minus keys — TYPE=KPI post-rule columns are excluded the way
-      // the reference filters TYPE!='KPI').
-      val lookups = cfg.rules.collect { case l: Lookup => l }
-      val suites = routed.keys.toSeq.sorted.flatMap { table =>
-        val spec = cfg.routes.find(_.table == table).get
-        val counters = spec.columns
-          .filterNot(c => keyCols.contains(c) || c == cfg.partitionCol)
-        val expected = routed(table).withColumn("_key", concat_ws("", keyCols.map(col): _*))
-        val actual = loaded(table).withColumn("_key", concat_ws("", keyCols.map(col): _*))
-        val missing = Reconcile.missingKeys(expected, actual, "_key")
-        val diffs =
-          if (counters.isEmpty) None
-          else Some(Reconcile.counterDiffs(expected, actual, "_key", counters))
-        val (missingInData, extraInData) = Reconcile.missingColumns(
-          spec.columns ++ spec.postRules.map(_.name), loaded(table))
-        // referential: every lookup rule whose fact keys survived into
-        // this table checks its keys against the dimension view
-        val refSuites = lookups
-          .filter(_.keys.forall { case (f, _) => loaded(table).columns.contains(f) })
-          .map { l =>
-            val factKey = l.keys.map(_._1)
-            val dimKey = l.keys.map(_._2)
-            val (fact, fk) =
-              if (factKey.sizeIs == 1) (loaded(table), factKey.head)
-              else (loaded(table).withColumn("_fk",
-                concat_ws("", factKey.map(col): _*)), "_fk")
-            val (dim, dk) =
-              if (dimKey.sizeIs == 1) (l.view, dimKey.head)
-              else (l.view.select(
-                concat_ws("", dimKey.map(col): _*).as("_dk")), "_dk")
-            Report.referentialSuite(
-              Reconcile.referentialSummary(fact, dim, fk, dk), table, l.name)
-          }
-        Seq(
-          Report.countSuite(Reconcile.countCompare(expected, actual, "_key"), "_key"),
-          Report.missingSuite(missing, "_key"),
-          Report.summaryRow("missing_records", table, missing),
-          Report.missingColumnsSuite(spark, table, missingInData, extraInData)) ++
-          diffs.toSeq.flatMap(d => Seq(
-            Report.counterDiffSuite(d, "_key"),
-            Report.summaryRow("value_diffs", table, d))) ++
-          refSuites
-      }
-      val report = Report.merge(suites: _*)
-      // toJunitXml collects, so the report materializes from the cache
-      // before the unpersist below; the returned DataFrames (parquet-
-      // backed or recomputable) stay valid after it
-      LibraryResult(loaded, report, Report.toJunitXml(report))
-    } finally transformed.unpersist()
+  /** A loaded table as the warehouse now holds it: the data columns as
+    * inferred from its files (so the missing-column suite sees the
+    * warehouse's real columns), the partition column with the type
+    * of the `written` frame. Partition-type inference alone would
+    * read a `day=05` directory back as the integer 5, and every key
+    * built from it would miss both ways. The data columns are inferred
+    * from ONE partition directory (a parquet read infers them from one
+    * file either way), so only the typed read lists the whole table —
+    * a parallel listing job once it holds more partition directories
+    * than `parallelPartitionDiscovery.threshold`.
+    */
+  private def readBack(spark: SparkSession, path: String, written: StructType,
+                       partitionCol: String): DataFrame = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val onePartition = fs.listStatus(root).map(_.getPath)
+      .find(_.getName.startsWith(s"$partitionCol=")).fold(path)(_.toString)
+    val inferred = spark.read.option("basePath", path).parquet(onePartition).schema
+    spark.read.schema(StructType(inferred.map { f =>
+      if (f.name == partitionCol) f.copy(dataType = written(partitionCol).dataType) else f
+    })).parquet(path)
   }
 
   /** Cycle from a compiled config, finishing the way the reference's

@@ -120,9 +120,6 @@ object Maintenance {
 
   /** Multi-column variant (e.g. bucket + batch-id delta partitions). */
   def overwritePartitions(incoming: DataFrame, path: String, partitionCols: Seq[String]): Unit = {
-    val spark = incoming.sparkSession
-    val prev = spark.conf.getOption("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
     // AQE rebalance on the partition columns before the partitioned
     // write (guide §6 "coalesce on write"): without it every input
     // task opens a file in every partition dir it holds rows for —
@@ -131,10 +128,12 @@ object Maintenance {
     // value at AQE's advisory size, so a load writes ~one right-sized
     // file per partition (and AQE splits a skewed partition instead
     // of funneling it to one task — the scale-safe form of
-    // repartition(partitionCols)).
-    try incoming.hint("rebalance", partitionCols.map(col): _*)
-      .write.mode("overwrite").partitionBy(partitionCols: _*).parquet(path)
-    finally prev.foreach(spark.conf.set("spark.sql.sources.partitionOverwriteMode", _))
+    // repartition(partitionCols)). Dynamic overwrite is a per-write
+    // option, not the session conf: flipping the conf and restoring it
+    // would race with a concurrent stream's writes in the same session.
+    incoming.hint("rebalance", partitionCols.map(col): _*)
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy(partitionCols: _*).parquet(path)
   }
 
   /** Per-granularity retention rule table — the reference drives

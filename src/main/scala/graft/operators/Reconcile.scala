@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 /** Reconciliation engine — the Spark re-expression of the reference's
@@ -123,19 +123,66 @@ object Reconcile {
     def side(df: DataFrame, sfx: String) = df.select(
       col(key) +: counters.map(c => col(c).cast("string").as(s"${c}_$sfx")): _*)
     val stackArgs = counters.map(c => s"'$c', ${c}_l, ${c}_r").mkString(", ")
-    val numL = col("val_left").cast("double")
-    val numR = col("val_right").cast("double")
-    val stringNeq =
-      coalesce(col("val_left") =!= col("val_right"), lit(false)) ||
-        (col("val_left").isNull =!= col("val_right").isNull)
     side(left, "l").join(side(right, "r"), Seq(key), "inner")
       .selectExpr(key,
         s"stack(${counters.size}, $stackArgs) AS (counter, val_left, val_right)")
-      .filter(
-        when(numL.isNotNull && numR.isNotNull,
-          round(numL, scale) - round(numR, scale) =!= 0.0)
-          .otherwise(stringNeq))
+      .filter(valuesDiffer(col("val_left"), col("val_right"), scale))
       .select(col(key), col("counter"), col("val_left"), col("val_right"))
+  }
+
+  /** The per-value predicate of [[counterDiffs]] over two string-
+    * carried values: numeric compare at `scale` when both parse as
+    * doubles, null-aware string compare otherwise.
+    */
+  private def valuesDiffer(vl: Column, vr: Column, scale: Int): Column = {
+    val numL = vl.cast("double")
+    val numR = vr.cast("double")
+    when(numL.isNotNull && numR.isNotNull, round(numL, scale) - round(numR, scale) =!= 0.0)
+      .otherwise(coalesce(vl =!= vr, lit(false)) || (vl.isNull =!= vr.isNull))
+  }
+
+  /** The keyed full-outer aggregate behind [[Report.compareData]]: both
+    * sides, tagged by origin, meet in ONE shuffle on `key` instead of
+    * one join per suite. Per key: the row count of each side
+    * (`cnt_left`, `cnt_right`; 0 = the key is missing on that side)
+    * and, when there are counters, `diffs` — the failing (counter,
+    * val_left, val_right) cells, [[counterDiffs]]' rows for that key,
+    * compared on the string-carried values [[counterDiffs]] compares.
+    * The aggregate keeps ONE row's counters per side, so a key's state
+    * stays bounded however often it repeats; `diffs` is therefore
+    * filled only for a key with exactly one row on each side, and a
+    * key with more rows on a side (`cnt_left * cnt_right > 1`) leaves
+    * its cells to [[counterDiffs]]' row-level join, which spills where
+    * a per-key cross product could not. `key` must be non-null (the
+    * cycle's `concat_ws` key is): a null key groups here but never
+    * matches in a join.
+    */
+  private[operators] def keyedCompare(left: DataFrame, right: DataFrame, key: String,
+                                      counters: Seq[String], scale: Int): DataFrame = {
+    def side(df: DataFrame, isLeft: Boolean) = df.select(
+      Seq(col(key), lit(isLeft).as("_is_left")) ++
+        Option.when(counters.nonEmpty)(struct(
+          counters.map(c => col(c).cast("string").as(c)): _*).as("_vals")): _*)
+    val isLeft = col("_is_left")
+    val cnts = Seq(count(when(isLeft, 1)).as("cnt_left"), count(when(!isLeft, 1)).as("cnt_right"))
+    // `first` skips the nulls `when` yields for the other side
+    val vals =
+      if (counters.isEmpty) Nil
+      else Seq(first(when(isLeft, col("_vals")), ignoreNulls = true).as("_vals_left"),
+        first(when(!isLeft, col("_vals")), ignoreNulls = true).as("_vals_right"))
+    val aggs = cnts ++ vals
+    val keyed = side(left, isLeft = true).unionByName(side(right, isLeft = false))
+      .groupBy(col(key)).agg(aggs.head, aggs.tail: _*)
+    if (counters.isEmpty) keyed
+    else {
+      val (l, r) = (col("_vals_left"), col("_vals_right"))
+      val single = col("cnt_left") === 1L && col("cnt_right") === 1L
+      val cells = array(counters.map(c => struct(lit(c).as("counter"),
+        l.getField(c).as("val_left"), r.getField(c).as("val_right"))): _*)
+      keyed.select(col(key), col("cnt_left"), col("cnt_right"),
+        filter(cells, d => single && valuesDiffer(d.getField("val_left"), d.getField("val_right"),
+          scale)).as("diffs"))
+    }
   }
 
   /** String-valued counter diff — the reference's fallback when a
@@ -163,10 +210,27 @@ object Reconcile {
       .withColumn("n_matched", col("n_facts") - col("n_orphans"))
   }
 
-  /** Schema (missing-column) comparison, reference
-    * HlxTools.py:806-818: columns expected by the spec but absent from
-    * the data, and vice versa. Pure metadata — no job runs.
+  /** Every referential leg of one fact table in ONE pass: per leg i,
+    * each fact row gets an existence flag from a broadcast of the
+    * dimension's keys (an ExistenceJoin — no distinct on the
+    * dimension, no change to the fact's multiplicity), and a single
+    * aggregate counts `n_facts` and the flagged `n_matched_i` —
+    * [[referentialSummary]]'s counts without a fact-side pass per leg.
+    * `legs` are (fact key columns, dimension, dimension key columns);
+    * a multi-column key compares the `concat_ws("")` of its columns,
+    * as the library cycle does.
     */
+  private[operators] def referentialFlags(
+      fact: DataFrame, legs: Seq[(Seq[String], DataFrame, Seq[String])]): DataFrame = {
+    def keyOf(cols: Seq[String]) =
+      if (cols.sizeIs == 1) col(cols.head) else concat_ws("", cols.map(col): _*)
+    val matched = legs.zipWithIndex.map { case ((fk, dim, dk), i) =>
+      count(when(broadcast(dim.select(keyOf(dk).as(s"_rk$i")))
+        .where(col(s"_rk$i") === keyOf(fk).outer()).exists(), 1)).as(s"n_matched_$i")
+    }
+    fact.agg(count(lit(1)).as("n_facts"), matched: _*)
+  }
+
   /** Snapshot diff between two versions of a dataset: per key, is the
     * row `added`, `removed`, `changed`, or `unchanged` — corpus
     * versioning for a training-data pipeline (what moved between two
@@ -228,6 +292,10 @@ object Reconcile {
       .select("p.*")
   }
 
+  /** Schema (missing-column) comparison, reference
+    * HlxTools.py:806-818: columns expected by the spec but absent from
+    * the data, and vice versa. Pure metadata — no job runs.
+    */
   def missingColumns(expected: Seq[String], df: DataFrame): (Seq[String], Seq[String]) = {
     val have = df.columns.toSeq
     (expected.diff(have), have.diff(expected))

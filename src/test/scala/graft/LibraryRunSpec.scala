@@ -132,6 +132,106 @@ class LibraryRunSpec extends AnyFunSuite {
     } finally spark.listenerManager.unregister(listener)
   }
 
+  test("library run reads zero-padded partition values back as written") {
+    val rawDir = java.nio.file.Files.createTempDirectory("lib_raw_pad")
+    val wh = java.nio.file.Files.createTempDirectory("lib_wh_pad").toString
+    writeRaw(rawDir, "F_05.csv", "05", 1 to 5)
+    writeRaw(rawDir, "F_12.csv", "12", 6 to 9)
+    val cfg = LibraryConfig(
+      rawPath = rawDir.toString + "/*.csv",
+      delimiter = "|",
+      rawColumns = Seq("id", "cnt"),
+      skipHeader = 1, skipFooter = 0, ignoreLines = Set(),
+      rules = Seq(
+        FromFilename("day", "F_(\\d{2})\\.csv", 1),
+        Derived("cntn", col("cnt").cast("long"))),
+      tagRules = Seq(),
+      routes = Seq(TableRoute("t", col("cntn").isNotNull, Seq("day", "id", "cntn"))),
+      partitionCol = "day",
+      warehouseDir = wh)
+    val result = LibraryRun.run(spark, cfg, keyCols = Seq("day", "id"))
+    // inferred as int, `day=05` would key as "51".."55" against the
+    // transform's "051".."055" and miss both ways
+    assert(result.tables("t").schema("day").dataType == org.apache.spark.sql.types.StringType)
+    assert(result.tables("t").select("day").distinct().collect().map(_.getString(0)).toSet ==
+      Set("05", "12"))
+    assert(result.report.filter(col("status") === "failed").count() == 0, result.junitXml)
+  }
+
+  test("library run job budget: one listing for parse, a bounded report") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // 36 tiny files, one day each: past the 32-path threshold, so
+    // listing the feed and listing the loaded table's 36 partition
+    // directories are each a parallel Spark job
+    val rawDir = java.nio.file.Files.createTempDirectory("lib_raw_budget")
+    val wh = java.nio.file.Files.createTempDirectory("lib_wh_budget").toString
+    for (i <- 0 until 36)
+      writeRaw(rawDir, s"N${i % 12}_${20240101 + i}.csv", "", (i * 10) until (i * 10 + 3))
+    import spark.implicits._
+    val idDim = (0 until 1200).map(i => (i.toString, s"name$i")).toDF("k", "nm")
+    val nodeDim = (0 until 12).map(n => (n.toString, s"SITE${n % 3}")).toDF("n_node", "n_site")
+    val cfg = LibraryConfig(
+      rawPath = rawDir.toString + "/*.csv",
+      delimiter = "|",
+      rawColumns = Seq("id", "cnt"),
+      skipHeader = 1, skipFooter = 0, ignoreLines = Set(),
+      rules = Seq(
+        FromFilename("node", "N(\\d+)_", 1),
+        FromFilename("day", "_(\\d{8})\\.csv", 1),
+        Derived("cntn", col("cnt").cast("long")),
+        Lookup("id_name", idDim, Seq("id" -> "k"), "nm", lit("?")),
+        Lookup("site", nodeDim, Seq("node" -> "n_node"), "n_site", lit("?"))),
+      tagRules = Seq(),
+      routes = Seq(TableRoute("t", col("cntn").isNotNull,
+        Seq("day", "id", "node", "cntn", "id_name", "site"))),
+      partitionCol = "day",
+      warehouseDir = wh)
+
+    val sc = spark.sparkContext
+    // only jobs started from this thread (and the threads it spawns)
+    // carry the marker, whatever else the session runs
+    val marker = "graft.test.cycle"
+    val descriptions = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).filter(_.getProperty(marker) != null).foreach { p =>
+          descriptions.add(Option(p.getProperty("spark.job.description")).getOrElse("<none>"))
+        }
+    }
+    sc.addSparkListener(listener)
+    sc.setLocalProperty(marker, "1")
+    sc.setJobDescription("caller")
+    try {
+      val result = LibraryRun.run(spark, cfg, keyCols = Seq("day", "id"))
+      assert(sc.getLocalProperty("spark.job.description") == "caller",
+        "the caller's job description must be restored")
+      assert(!result.junitXml.contains("<failure"), result.junitXml)
+      org.apache.spark.GraftListenerGlue.drain(sc)
+    } finally {
+      sc.setLocalProperty(marker, null)
+      sc.setJobDescription(null)
+      sc.removeSparkListener(listener)
+    }
+    // Spark's parallel file listing replaces the job description with
+    // its own, naming the listed paths: the feed's listing is parse,
+    // the warehouse's is readback
+    val byPhase = descriptions.toArray(Array.empty[String]).toSeq
+      .map {
+        case d if d.startsWith("Listing leaf files") && d.contains(rawDir.toString) =>
+          "LibraryRun parse"
+        case d if d.startsWith("Listing leaf files") && d.contains(wh) => "LibraryRun readback"
+        case d => d.split(' ').take(2).mkString(" ")
+      }
+      .groupBy(identity).view.mapValues(_.size).toMap
+    info(s"jobs per phase: ${byPhase.toSeq.sorted.mkString(", ")}")
+    assert(byPhase.keys.forall(_.startsWith("LibraryRun ")),
+      s"every cycle job carries a LibraryRun description: $byPhase")
+    assert(byPhase.getOrElse("LibraryRun parse", 0) <= 1, s"parse lists the feed once: $byPhase")
+    assert(byPhase.getOrElse("LibraryRun readback", 0) <= 2,
+      s"readback lists the warehouse once and infers its schema once: $byPhase")
+    assert(byPhase.getOrElse("LibraryRun report", 0) <= 15, s"report job budget: $byPhase")
+  }
+
   test("overwritePartitions is idempotent and partition-scoped") {
     val wh = java.nio.file.Files.createTempDirectory("ow_wh").toString + "/t"
     import spark.implicits._
