@@ -200,12 +200,13 @@ object EtlSoak {
     // A1+A3+A4: delimiter parse, filename fields, tag field
     run("a1_csv", "delimiter+slice+ignore+tag+filename")(
       parsed = {
-        val raw = ChillPipeline.rawCsv(spark, s"$work/a1/*.csv", "|",
+        val lines = ChillPipeline.textLines(spark, s"$work/a1/*.csv")
+        val raw = ChillPipeline.rawCsvFrom(spark, lines, "|",
           Seq("event_id", "event_type", "cents"), 2, 1, Set("IGNORE|ME|0"))
         val tagRule = FromTag("region", "#REGION",
           c => regexp_extract(c, "#REGION=(R\\d+)", 1))
         FieldRule.applyAll(
-            ChillPipeline.withTagColumns(spark, s"$work/a1/*.csv", raw, Seq(tagRule)),
+            ChillPipeline.withTagColumnsFrom(lines, raw, Seq(tagRule)),
             Seq(FromFilename("node_id", "NODE(\\d+)_", 1),
               FromFilename("file_day", "_(\\d{8})\\.csv", 1), tagRule))
           .groupBy(col("node_id").cast("int").as("node"), col("file_day"), col("region"))

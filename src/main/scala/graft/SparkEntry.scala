@@ -2057,9 +2057,11 @@ object SparkEntry {
       parsed.cfg.copy(input_path = rawDir.toString + "/*.csv"),
       rawDir.resolve("wh").toString)
     val cfg = compiled.lib
-    val raw = ChillPipeline.rawCsv(s, cfg.rawPath, cfg.delimiter, cfg.rawColumns,
+    // one line set feeds the slice and the tag columns: the feed is listed once
+    val lines = ChillPipeline.textLines(s, cfg.rawPath)
+    val raw = ChillPipeline.rawCsvFrom(s, lines, cfg.delimiter, cfg.rawColumns,
       cfg.skipHeader, cfg.skipFooter, cfg.ignoreLines)
-    val tagged = ChillPipeline.withTagColumns(s, cfg.rawPath, raw, cfg.tagRules)
+    val tagged = ChillPipeline.withTagColumnsFrom(lines, raw, cfg.tagRules)
     ChillPipeline.run(tagged, cfg.rules, cfg.routes)
       .toSeq.sortBy(_._1)
       .map { case (table, df) =>

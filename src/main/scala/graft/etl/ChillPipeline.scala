@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.{GlobPattern, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -62,14 +63,14 @@ object ChillPipeline {
   def rawCsv(spark: SparkSession, path: String, delimiter: String,
              columns: Seq[String], skipHeader: Int, skipFooter: Int,
              ignoreLines: Set[String]): DataFrame =
-    rawCsvFrom(spark, path, textLines(spark, path), delimiter, columns,
+    rawCsvFrom(spark, textLines(spark, path), delimiter, columns,
       skipHeader, skipFooter, ignoreLines)
 
-  /** [[rawCsv]] over the [[textLines]] of `path` the caller already
+  /** [[rawCsv]] over a [[textLines]] line set the caller already
     * holds — so a caller that also derives tag columns from the same
     * lines ([[withTagColumnsFrom]]) lists the files once, not twice.
     */
-  def rawCsvFrom(spark: SparkSession, path: String, lines: DataFrame, delimiter: String,
+  def rawCsvFrom(spark: SparkSession, lines: DataFrame, delimiter: String,
                  columns: Seq[String], skipHeader: Int, skipFooter: Int,
                  ignoreLines: Set[String]): DataFrame = {
     // empty columns = derive them from the feed's own header line,
@@ -77,33 +78,118 @@ object ChillPipeline {
     // the body parse then starts one line later
     val (cols, skip) =
       if (columns.nonEmpty) (columns, skipHeader)
-      else (headerColumns(spark, path, delimiter, skipHeader, ignoreLines), skipHeader + 1)
+      else (headerColumns(spark, lines, delimiter, skipHeader, ignoreLines), skipHeader + 1)
     sliceLines(lines, delimiter, cols, skip, skipFooter, ignoreLines)
   }
 
-  /** The `(_file, value)` line set of the text files under `path`.
-    * Building it lists the files (a Spark job once a glob matches more
-    * than `parallelPartitionDiscovery.threshold` paths); every frame
-    * derived from it reuses that listing.
+  /** The `(_file, value)` line set of the text files `path` names: the
+    * one place a raw feed is opened.
+    *
+    * Spark expands a glob into one root path per file and lists more
+    * than `spark.sql.sources.parallelPartitionDiscovery.threshold`
+    * root paths in a Spark job of one task per file, which only
+    * re-stats the files the driver has just globbed. So a `<dir
+    * glob>/<name glob>` path is read as its matched directories with
+    * `pathGlobFilter = <name glob>` — the same files, listed on the
+    * driver — when one `listStatus` per directory shows they hold only
+    * files, the glob matches at least one file and there are no more
+    * directories than that threshold. Every other path (a plain file
+    * or directory, a glob over directories that hold subdirectories,
+    * where a directory read runs partition discovery and fails on a
+    * `k=v` one, a glob matching nothing) is read as
+    * `spark.read.text(path)`, with its results and its errors.
     */
-  def textLines(spark: SparkSession, path: String): DataFrame =
-    spark.read.text(path).select(input_file_name().as("_file"), col("value"))
+  def textLines(spark: SparkSession, path: String): DataFrame = {
+    val text = feedDirectories(spark, path) match {
+      case Some((dirs, nameGlob)) => spark.read.option("pathGlobFilter", nameGlob).text(dirs: _*)
+      case None                   => spark.read.text(path)
+    }
+    text.select(input_file_name().as("_file"), col("value"))
+  }
+
+  /** `path` as (directory glob, name glob) when its last component is
+    * a glob. None for a plain last component, a trailing `/`, an
+    * invalid glob, or a brace group holding a `/` (which only a
+    * whole-path match reads the way Hadoop's glob does).
+    */
+  private[etl] def splitGlob(path: String): Option[(Path, String)] = {
+    val depths = path.scanLeft(0)((d, c) => if (c == '{') d + 1 else if (c == '}') d - 1 else d)
+    val slashInBraces = path.zip(depths.tail).exists { case (c, d) => c == '/' && d > 0 }
+    if (path.endsWith("/") || depths.exists(_ < 0) || depths.last != 0 || slashInBraces) None
+    else scala.util.Try {
+      val p = new Path(path)
+      Option(p.getParent).filter(_ => new GlobPattern(p.getName).hasWildcard).map((_, p.getName))
+    }.toOption.flatten
+  }
+
+  /** The directories [[textLines]] reads `path` as, with its name glob;
+    * None when it must read `path` itself.
+    */
+  private def feedDirectories(spark: SparkSession, path: String): Option[(Seq[String], String)] =
+    splitGlob(path).flatMap { case (dirGlob, nameGlob) =>
+      val fs = dirGlob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      val dirs = Option(fs.globStatus(dirGlob)).getOrElse(Array.empty)
+        .filter(_.isDirectory).map(_.getPath)
+      val threshold =
+        spark.conf.get("spark.sql.sources.parallelPartitionDiscovery.threshold").toInt
+      // Spark would read a directory name with glob characters as a glob
+      if (dirs.isEmpty || dirs.length > threshold ||
+          dirs.exists(_.toString.exists("{}[]*?\\".contains(_)))) None
+      else {
+        val children = dirs.flatMap(d => fs.listStatus(d))
+        val names = new GlobPattern(nameGlob)
+        val matched = children.exists(c => names.matches(c.getPath.getName))
+        if (children.exists(_.isDirectory) || !matched) None
+        else Some((dirs.map(_.toString).toSeq, nameGlob))
+      }
+    }
+
+  /** `lines` without the rows of files whose path the glob `path` does
+    * not match, component by component as Hadoop's glob does. A file
+    * stream over `path`'s directory glob ([[LibraryRun.stream]]) also
+    * sees files directly under, or nested below, those directories;
+    * this keeps its batches to the files a glob source would see.
+    */
+  private[etl] def withinGlob(spark: SparkSession, lines: DataFrame, path: String): DataFrame = {
+    val glob = new Path(path)
+    val parts = glob.getFileSystem(spark.sparkContext.hadoopConfiguration)
+      .makeQualified(glob).toUri.getPath.split('/')
+    lines.filter(udf(new GlobMatch(parts)).apply(col("_file")))
+  }
+
+  /** Whether a file URI's path matches the glob components `parts`.
+    * A task reads a file's rows together, so the last answer is kept.
+    */
+  private final class GlobMatch(parts: Array[String])
+      extends (String => Boolean) with Serializable {
+    @transient private lazy val patterns = parts.map(new GlobPattern(_))
+    @transient private var last: String = _
+    @transient private var lastMatched = false
+    def apply(file: String): Boolean = {
+      if (file != last) {
+        val names = new Path(new java.net.URI(file)).toUri.getPath.split('/')
+        lastMatched = names.length == patterns.length &&
+          patterns.zip(names).forall { case (g, n) => g.matches(n) }
+        last = file
+      }
+      lastMatched
+    }
+  }
 
   /** Raw column names from the feed itself — the reference's
     * `pd.read_csv(stream, sep=delimiter)` semantics (Partrans.py:
     * 222-236): after the valid-lines slice and ignore-lines filter,
     * the FIRST remaining line is the header. Driver-side peek of one
-    * file (the lexicographically first match — in the Chill model all
-    * files of a feed share one layout), so no Spark job runs.
+    * file of `lines` (the lexicographically first of the files its
+    * scan reads — in the Chill model all files of a feed share one
+    * layout), so no Spark job runs.
     */
-  def headerColumns(spark: SparkSession, path: String, delimiter: String,
+  def headerColumns(spark: SparkSession, lines: DataFrame, delimiter: String,
                     skipHeader: Int, ignoreLines: Set[String]): Seq[String] = {
-    val hPath = new org.apache.hadoop.fs.Path(path)
-    val fs = hPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val matches = Option(fs.globStatus(hPath)).getOrElse(Array.empty)
-      .filter(_.isFile).map(_.getPath)
-    require(matches.nonEmpty, s"headerColumns: no files match $path")
-    val first = matches.minBy(_.toString)
+    val files = lines.inputFiles.map(f => new Path(new java.net.URI(f)))
+    require(files.nonEmpty, "headerColumns: the feed has no files")
+    val first = files.minBy(_.toString)
+    val fs = first.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val in = new java.io.BufferedReader(new java.io.InputStreamReader(
       fs.open(first), java.nio.charset.StandardCharsets.UTF_8))
     try {
@@ -223,8 +309,7 @@ object ChillPipeline {
   def rawFixedWidth(spark: SparkSession, path: String,
                     columns: Seq[FixedWidthCol], skipHeader: Int,
                     skipFooter: Int, ignoreLines: Set[String]): DataFrame =
-    sliceFixedWidth(
-      spark.read.text(path).select(input_file_name().as("_file"), col("value")),
+    sliceFixedWidth(textLines(spark, path),
       columns, skipHeader, skipFooter, ignoreLines)
 
   /** [[rawFixedWidth]] over an existing `(_file, value)` line set. */
@@ -252,8 +337,7 @@ object ChillPipeline {
                    skipHeader: Int, skipFooter: Int,
                    ignoreLines: Set[String], delimiter: String = ",",
                    quote: String = "\""): DataFrame =
-    sliceCsvQuoted(
-      spark.read.text(path).select(input_file_name().as("_file"), col("value")),
+    sliceCsvQuoted(textLines(spark, path),
       columns, skipHeader, skipFooter, ignoreLines, delimiter, quote)
 
   /** [[rawCsvQuoted]] over an existing `(_file, value)` line set. */
@@ -287,8 +371,7 @@ object ChillPipeline {
                    schema: org.apache.spark.sql.types.StructType,
                    skipHeader: Int = 0, skipFooter: Int = 0,
                    ignoreLines: Set[String] = Set.empty): DataFrame =
-    sliceJsonLines(
-      spark.read.text(path).select(input_file_name().as("_file"), col("value")),
+    sliceJsonLines(textLines(spark, path),
       schema, skipHeader, skipFooter, ignoreLines)
 
   /** [[rawJsonLines]] over an existing `(_file, value)` line set. */

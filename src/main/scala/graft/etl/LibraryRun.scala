@@ -1,5 +1,6 @@
 package graft.etl
 
+import org.apache.hadoop.fs.GlobPattern
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.StructType
@@ -17,6 +18,18 @@ import graft.operators.{Maintenance, Report}
   * overwrite, and the comparison is one keyed aggregate per table.
   */
 final case class LibraryConfig(
+    /** The raw feed. A `<dir glob>/<name glob>` path (a name glob such
+      * as `*.csv` under one directory, or under every directory a glob
+      * such as `raw/d*` matches) whose matched directories hold only
+      * files, at most `spark.sql.sources.parallelPartitionDiscovery.
+      * threshold` of them, is read as those directories filtered by
+      * the name glob and listed on the driver. Any other path (a plain
+      * file or directory, a glob over directories with subdirectories,
+      * a glob matching nothing) is read as given. Both forms read the
+      * same files, never a hidden (`_`/`.`-prefixed) one. See
+      * [[ChillPipeline.textLines]] and, for the stream,
+      * [[LibraryRun.stream]].
+      */
     rawPath: String,
     delimiter: String,
     rawColumns: Seq[String],
@@ -69,7 +82,7 @@ object LibraryRun {
       // than a disk read of the parsed columns).
       phase("parse")
       val lines = ChillPipeline.textLines(spark, cfg.rawPath)
-      val raw = ChillPipeline.rawCsvFrom(spark, cfg.rawPath, lines, cfg.delimiter,
+      val raw = ChillPipeline.rawCsvFrom(spark, lines, cfg.delimiter,
         cfg.rawColumns, cfg.skipHeader, cfg.skipFooter, cfg.ignoreLines)
       val tagged = ChillPipeline.withTagColumnsFrom(lines, raw, cfg.tagRules)
       val transformed = FieldRule.applyAll(tagged, cfg.rules)
@@ -170,11 +183,33 @@ object LibraryRun {
     * it carries, so replaying a file set is idempotent as long as
     * files carry whole partitions (the Chill model: one file = one
     * datetime slice).
+    *
+    * A `<dir glob>/<name glob>` raw path is streamed as `<dir glob>`
+    * with `pathGlobFilter = <name glob>` and `recursiveFileLookup`, so
+    * neither defining the stream nor a trigger expands the glob into
+    * one root path per file (a Spark listing job of one task per file
+    * past `parallelPartitionDiscovery.threshold` files). Each batch
+    * then drops the files the glob itself does not match — one put
+    * directly under, or nested below, a matched directory — so the
+    * stream loads what a glob source would, and its checkpoint records
+    * the loaded files under the same paths. Any other raw path, or a
+    * plain root directory that does not exist yet, streams through
+    * the glob source itself.
     */
   def stream(spark: SparkSession, cfg: LibraryConfig)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {
-    val lines = spark.readStream.text(cfg.rawPath)
-      .select(input_file_name().as("_file"), col("value"))
+    val feed = ChillPipeline.splitGlob(cfg.rawPath).filter { case (dirGlob, _) =>
+      // a missing plain root is left to the glob source, which waits for it
+      new GlobPattern(dirGlob.toString).hasWildcard ||
+        dirGlob.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(dirGlob)
+    }
+    val text = feed.fold(spark.readStream.text(cfg.rawPath)) { case (dirGlob, nameGlob) =>
+      spark.readStream.option("pathGlobFilter", nameGlob)
+        .option("recursiveFileLookup", "true").text(dirGlob.toString)
+    }
+    val delivered = text.select(input_file_name().as("_file"), col("value"))
+    val lines =
+      if (feed.isEmpty) delivered else ChillPipeline.withinGlob(spark, delivered, cfg.rawPath)
     lines.writeStream.foreachBatch { (batch: DataFrame, _: Long) =>
       val raw = ChillPipeline.sliceLines(batch, cfg.delimiter, cfg.rawColumns,
         cfg.skipHeader, cfg.skipFooter, cfg.ignoreLines)

@@ -169,10 +169,8 @@ object Maintenance {
     * across files.
     */
   def parseDblErrors(spark: org.apache.spark.sql.SparkSession, path: String): DataFrame =
-    parseDblErrorLines(
-      spark.read.text(path)
-        .select(input_file_name().as("log_file"), col("value"),
-          monotonically_increasing_id().as("_ord")))
+    parseDblErrorLines(graft.etl.ChillPipeline.textLines(spark, path)
+      .select(col("_file").as("log_file"), col("value"), monotonically_increasing_id().as("_ord")))
 
   /** Line-level form of [[parseDblErrors]]: `lines` carries
     * (log_file, value, _ord) — the path form feeds it from raw text,

@@ -54,6 +54,76 @@ class EtlSourceSpec extends AnyFunSuite {
     assert(df.filter(col("id") === "7").select("cnt1").collect().head.getString(0) == "70")
   }
 
+  test("rawCsv takes the derived header from a file the parse reads, not a hidden one") {
+    // Hadoop's glob matches `_a.csv` and `.c.csv`; Spark's read skips
+    // both, so neither may supply the header
+    val d = java.nio.file.Files.createTempDirectory("hdrpm")
+    java.nio.file.Files.writeString(d.resolve("_a.csv"), "x|y|z\n9|9|9")
+    java.nio.file.Files.writeString(d.resolve(".c.csv"), "p|q\n8|8")
+    java.nio.file.Files.writeString(d.resolve("b.csv"), "id|cnt\n1|10\n2|20")
+    val df = ChillPipeline.rawCsv(spark, d.toString + "/*.csv", "|",
+      Seq.empty, skipHeader = 0, skipFooter = 0, ignoreLines = Set.empty)
+    assert(df.columns.toSeq == Seq("_file", "id", "cnt"))
+    assert(df.select("id", "cnt").collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      Set(("1", "10"), ("2", "20")))
+  }
+
+  test("textLines reads the lines spark.read.text reads, for every path form") {
+    import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
+    val root = java.nio.file.Files.createTempDirectory("linespm")
+    def write(rel: String, body: String): Unit = {
+      val f = root.resolve(rel)
+      java.nio.file.Files.createDirectories(f.getParent)
+      java.nio.file.Files.writeString(f, body)
+    }
+    // hidden files, a success marker and a non-matching name beside the feed
+    write("feed/a.csv", "a1\na2")
+    write("feed/b.csv", "b1")
+    write("feed/_x.csv", "hidden underscore")
+    write("feed/.y.csv", "hidden dot")
+    write("feed/_SUCCESS", "")
+    write("feed/notes.txt", "not a csv")
+    // a plain subdirectory
+    write("sub/a.csv", "s1")
+    write("sub/inner/c.csv", "nested")
+    // a k=v subdirectory: a directory read would fail on conflicting
+    // partition directory structures
+    write("part/a.csv", "p1")
+    write("part/day=1/c.csv", "partition")
+    // delivery directories, one of them hidden, and a file beside them
+    write("deliv/d1/a.csv", "d1a")
+    write("deliv/d1/_h.csv", "hidden in d1")
+    write("deliv/d2/b.csv", "d2b")
+    write("deliv/d2/x.txt", "not a csv")
+    write("deliv/_hid/c.csv", "in a hidden dir")
+    write("deliv/top.csv", "top level")
+    def lines(df: org.apache.spark.sql.DataFrame): Map[(String, String), Int] =
+      df.collect().map(r => (r.getString(0), r.getString(1))).groupBy(identity)
+        .view.mapValues(_.length).toMap
+    def rootsAreDirs(df: org.apache.spark.sql.DataFrame): Boolean =
+      df.queryExecution.analyzed.collect { case l: LogicalRelation => l.relation }
+        .collect { case r: HadoopFsRelation => r.location.rootPaths }.flatten
+        .forall(p => java.nio.file.Files.isDirectory(java.nio.file.Paths.get(p.toUri)))
+    val cases = Seq(
+      "feed/*.csv" -> true, "feed/*" -> true, "sub/*.csv" -> false, "part/*.csv" -> false,
+      "deliv/*/*.csv" -> true, "deliv/d{1,2}/*" -> true, "feed" -> true, "feed/a.csv" -> false)
+    for ((rel, dirForm) <- cases) {
+      val path = s"$root/$rel"
+      val got = ChillPipeline.textLines(spark, path)
+      val want = spark.read.text(path).select(input_file_name(), col("value"))
+      assert(lines(got) == lines(want), s"lines of $rel")
+      assert(rootsAreDirs(got) == dirForm, s"read form of $rel")
+    }
+    assert(lines(ChillPipeline.textLines(spark, s"$root/feed/*.csv")).keySet.map(_._2) ==
+      Set("a1", "a2", "b1"))
+    // a glob matching no file fails as spark.read.text does
+    val none = s"$root/feed/*.none"
+    val want = intercept[org.apache.spark.sql.AnalysisException](spark.read.text(none))
+    val got =
+      intercept[org.apache.spark.sql.AnalysisException](ChillPipeline.textLines(spark, none))
+    assert(got.getCondition == want.getCondition)
+  }
+
   test("rawFixedWidth: positional slice, trim, valid-line controls") {
     val d = java.nio.file.Files.createTempDirectory("fwpm")
     // layout: id 1-4 (left-padded), name 5-12 (right-padded), qty 13-18

@@ -158,11 +158,11 @@ class LibraryRunSpec extends AnyFunSuite {
     assert(result.report.filter(col("status") === "failed").count() == 0, result.junitXml)
   }
 
-  test("library run job budget: one listing for parse, a bounded report") {
+  test("library run job budget: no listing job for parse, a bounded report") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // 36 tiny files, one day each: past the 32-path threshold, so
-    // listing the feed and listing the loaded table's 36 partition
-    // directories are each a parallel Spark job
+    // reading the feed's glob as 36 root paths, or listing the loaded
+    // table's 36 partition directories, is a parallel Spark job
     val rawDir = java.nio.file.Files.createTempDirectory("lib_raw_budget")
     val wh = java.nio.file.Files.createTempDirectory("lib_wh_budget").toString
     for (i <- 0 until 36)
@@ -226,10 +226,90 @@ class LibraryRunSpec extends AnyFunSuite {
     info(s"jobs per phase: ${byPhase.toSeq.sorted.mkString(", ")}")
     assert(byPhase.keys.forall(_.startsWith("LibraryRun ")),
       s"every cycle job carries a LibraryRun description: $byPhase")
-    assert(byPhase.getOrElse("LibraryRun parse", 0) <= 1, s"parse lists the feed once: $byPhase")
+    assert(byPhase.getOrElse("LibraryRun parse", 0) == 0,
+      s"parse lists the feed's one directory on the driver: $byPhase")
     assert(byPhase.getOrElse("LibraryRun readback", 0) <= 2,
       s"readback lists the warehouse once and infers its schema once: $byPhase")
     assert(byPhase.getOrElse("LibraryRun report", 0) <= 15, s"report job budget: $byPhase")
+  }
+
+  test("library run stream lists its feed on the driver and loads only the glob's files") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val root = java.nio.file.Files.createTempDirectory("lib_stream_feed")
+    val rawDir = root.resolve("raw")
+    val staging = root.resolve("staging")
+    val wh = root.resolve("wh").toString
+    java.nio.file.Files.createDirectories(rawDir)
+    // a delivery is written beside the feed and moved in whole, so the
+    // stream never sees part of it
+    def deliver(rel: String, files: (String, Range)*): Unit = {
+      val d = staging.resolve(rel)
+      files.foreach { case (name, ids) =>
+        java.nio.file.Files.createDirectories(d.resolve(name).getParent)
+        writeRaw(d, name, "", ids)
+      }
+      java.nio.file.Files.move(d, rawDir.resolve(rel), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+    }
+    val cfg = LibraryConfig(
+      rawPath = rawDir.toString + "/*/*.csv",
+      delimiter = "|",
+      rawColumns = Seq("id", "cnt"),
+      skipHeader = 1, skipFooter = 0, ignoreLines = Set(),
+      rules = Seq(
+        FromFilename("day", "_(\\d{8})\\.csv", 1),
+        Derived("cntn", col("cnt").cast("long"))),
+      tagRules = Seq(),
+      routes = Seq(TableRoute("t", col("cntn").isNotNull, Seq("day", "id", "cntn"))),
+      partitionCol = "day",
+      warehouseDir = wh)
+    // Spark's parallel file listing names the listed paths in its job description
+    val listings = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("spark.job.description")))
+          .filter(d => d.startsWith("Listing leaf files") && d.contains(rawDir.toString))
+          .foreach(listings.add)
+    }
+    val sc = spark.sparkContext
+    def listed(): Seq[String] = {
+      org.apache.spark.GraftListenerGlue.drain(sc)
+      val out = listings.toArray(Array.empty[String]).toSeq
+      listings.clear()
+      out
+    }
+    def days(): Set[String] =
+      spark.read.parquet(s"$wh/t").select(col("day").cast("string")).distinct()
+        .collect().map(_.getString(0)).toSet
+    sc.addSparkListener(listener)
+    try {
+      deliver("d0001",
+        (0 until 36).map(i => s"N${i % 12}_${20240101 + i}.csv" -> (i * 10 until i * 10 + 3)): _*)
+      val writer = LibraryRun.stream(spark, cfg)
+      assert(listed().isEmpty, "defining the stream lists the feed on the driver")
+      val q = writer.option("checkpointLocation", root.resolve("ckpt").toString).start()
+      try {
+        q.processAllAvailable()
+        // the one allowed listing: the source building its first batch
+        // over that batch's own 36 files
+        val first = listed()
+        assert(first.size <= 1 && first.forall(_.contains("36 paths")), first)
+        assert(days().size == 36)
+        // one file in the glob, one nested below a delivery directory
+        deliver("d0002", "N0_20240201.csv" -> (0 until 3), "late/N1_20240202.csv" -> (3 until 6))
+        q.processAllAvailable()
+        // one file directly under the feed root
+        java.nio.file.Files.createDirectories(staging)
+        writeRaw(staging, "N2_20240203.csv", "", 6 until 9)
+        java.nio.file.Files.move(staging.resolve("N2_20240203.csv"),
+          rawDir.resolve("N2_20240203.csv"), java.nio.file.StandardCopyOption.ATOMIC_MOVE)
+        q.processAllAvailable()
+        assert(listed().isEmpty, "a trigger lists the feed on the driver")
+      } finally q.stop()
+      assert(q.exception.isEmpty, q.exception)
+      assert(days() == (0 until 36).map(i => (20240101 + i).toString).toSet + "20240201",
+        "files outside the glob never reach the warehouse")
+      assert(spark.read.parquet(s"$wh/t").count() == 36 * 3 + 3)
+    } finally sc.removeSparkListener(listener)
   }
 
   test("overwritePartitions is idempotent and partition-scoped") {
