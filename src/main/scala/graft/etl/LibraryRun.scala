@@ -60,11 +60,15 @@ object LibraryRun {
     * transformed feed, from which every count, missing-key and
     * summary case and the value diffs of keys with one row per side
     * derive (duplicated keys alone go through a row-level join), plus
-    * one flag aggregate for all its referential legs — and the merged
-    * report renders with the single collect of [[Report.toJunitXml]]. Jobs carry the description
-    * `LibraryRun parse`, `LibraryRun load <table>`, `LibraryRun
-    * readback` or `LibraryRun report`; the caller's description is
-    * restored on return.
+    * one flag aggregate for all its referential legs. Its two eager
+    * actions also give each suite's totals, and the junit XML renders
+    * from the totals of all tables ([[Report.renderJunitXml]]): the
+    * merged report is read again only to collect its capped failures,
+    * and only when some suite failed, so a clean cycle renders its XML
+    * without a Spark job. `LibraryResult.report` is the full report
+    * table. Jobs carry the description `LibraryRun parse`,
+    * `LibraryRun load <table>`, `LibraryRun readback` or `LibraryRun
+    * report`; the caller's description is restored on return.
     */
   def run(spark: SparkSession, cfg: LibraryConfig, keyCols: Seq[String]): LibraryResult = {
     val sc = spark.sparkContext
@@ -113,19 +117,20 @@ object LibraryRun {
         // the reference filters TYPE!='KPI').
         phase("report")
         val lookups = cfg.rules.collect { case l: Lookup => (l.name, l.view, l.keys) }
-        val report = Report.merge(routed.keys.toSeq.sorted.map { table =>
+        val compared = routed.keys.toSeq.sorted.map { table =>
           val spec = cfg.routes.find(_.table == table).get
           val counters = spec.columns
             .filterNot(c => keyCols.contains(c) || c == cfg.partitionCol)
-          val compared = Report.compareData(table, routed(table), loaded(table), keyCols,
+          val c = Report.compareData(table, routed(table), loaded(table), keyCols,
             counters, spec.columns ++ spec.postRules.map(_.name), lookups)
-          keyedFrames += compared.keyed
-          compared.report
-        }: _*)
-        // toJunitXml collects, so the report materializes from the
-        // caches before the unpersists below; the returned DataFrames
-        // (parquet-backed or recomputable) stay valid after them
-        LibraryResult(loaded, report, Report.toJunitXml(report))
+          keyedFrames += c.keyed
+          c
+        }
+        val report = Report.merge(compared.map(_.report): _*)
+        // a failing report collects its failures slice here, from the
+        // caches, before the unpersists below; the returned DataFrames
+        // (parquet-backed, local or recomputable) stay valid after them
+        LibraryResult(loaded, report, Report.renderJunitXml(compared.flatMap(_.totals), report))
       } finally {
         keyedFrames.foreach(_.unpersist())
         transformed.unpersist()
@@ -142,18 +147,27 @@ object LibraryRun {
     * from ONE partition directory (a parquet read infers them from one
     * file either way), so only the typed read lists the whole table —
     * a parallel listing job once it holds more partition directories
-    * than `parallelPartitionDiscovery.threshold`.
+    * than `parallelPartitionDiscovery.threshold`. A table with no
+    * partition directory (a route that matched no rows) has no file to
+    * infer from: it reads back empty with the `written` columns, the
+    * partition column last as in a non-empty read.
     */
   private def readBack(spark: SparkSession, path: String, written: StructType,
                        partitionCol: String): DataFrame = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val onePartition = fs.listStatus(root).map(_.getPath)
-      .find(_.getName.startsWith(s"$partitionCol=")).fold(path)(_.toString)
-    val inferred = spark.read.option("basePath", path).parquet(onePartition).schema
-    spark.read.schema(StructType(inferred.map { f =>
-      if (f.name == partitionCol) f.copy(dataType = written(partitionCol).dataType) else f
-    })).parquet(path)
+      .find(_.getName.startsWith(s"$partitionCol="))
+    val schema = onePartition match {
+      case Some(p) =>
+        StructType(spark.read.option("basePath", path).parquet(p.toString).schema.map { f =>
+          if (f.name == partitionCol) f.copy(dataType = written(partitionCol).dataType) else f
+        })
+      case None => // nullable, as a parquet read returns every column
+        StructType((written.filterNot(_.name == partitionCol) :+ written(partitionCol))
+          .map(_.copy(nullable = true)))
+    }
+    spark.read.schema(schema).parquet(path)
   }
 
   /** Cycle from a compiled config, finishing the way the reference's

@@ -9,7 +9,8 @@ import graft.operators.{Reconcile, Report}
 /** The fused single-pass compare (`Report.compareData`) against the
   * per-suite composition it replaces in the library cycle, on dirty
   * inputs: the report rows must be the same multiset and the junit
-  * XML byte-identical, capped failure lists included.
+  * XML byte-identical, capped failure lists included — also when it
+  * is rendered from `compareData`'s own suite totals.
   */
 class CompareDataSpec extends AnyFunSuite {
   import SparkTestSession._
@@ -49,6 +50,12 @@ class CompareDataSpec extends AnyFunSuite {
       Report.missingColumnsSuite(spark, table, missingInData, extraInData)) ++
       diffSuites ++ refSuites: _*)
   }
+
+  /** The XML rendered from `compareData`'s totals equals a collect of its report. */
+  private def assertRendersFromTotals(fused: Report.Compared): Unit =
+    for (cap <- Seq(2, 100))
+      assert(Report.renderJunitXml(fused.totals, fused.report, cap) ==
+        Report.toJunitXml(fused.report, cap), s"cap $cap")
 
   private def rows(report: DataFrame): Seq[String] =
     report.select("suite", "test_name", "status", "message").collect()
@@ -105,6 +112,7 @@ class CompareDataSpec extends AnyFunSuite {
       assert(!got.exists(_.contains("fk absent")))
       for (cap <- Seq(2, 100))
         assert(Report.toJunitXml(fused.report, cap) == Report.toJunitXml(reference, cap))
+      assertRendersFromTotals(fused)
     } finally fused.keyed.unpersist()
   }
 
@@ -114,6 +122,7 @@ class CompareDataSpec extends AnyFunSuite {
       val reference = perSuite("t", expected, loaded, Nil, specColumns, Nil)
       assert(rows(fused.report) == rows(reference))
       assert(Report.toJunitXml(fused.report, 2) == Report.toJunitXml(reference, 2))
+      assertRendersFromTotals(fused)
     } finally fused.keyed.unpersist()
   }
 
@@ -132,6 +141,56 @@ class CompareDataSpec extends AnyFunSuite {
       val nDup = (for (i <- 0 until 120; j <- 0 until 150 if i % 4 != j % 5) yield 1).size
       assert(got.count(_.startsWith("value_diffs|diff for d11 num|")) == nDup)
       assert(got.contains(s"value_diffs|t|failed|failing_cases=${nDup + 1}"))
+      assertRendersFromTotals(fused)
     } finally fused.keyed.unpersist()
+  }
+
+  test("a clean pair renders its junit XML from compareData's totals without a Spark job") {
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    // no duplicated key, so every pair of rows compares clean
+    val clean = expected.filter(col("id") =!= "3")
+    val lookups = Seq(("day", Seq("d1", "d2").toDF("d"), Seq("day" -> "d")))
+    val fused = Report.compareData("t", clean, clean, keyCols, Seq("num", "txt", "cnt"),
+      clean.columns.toSeq, lookups)
+    try {
+      assert(fused.totals.forall(_.failures == 0), fused.totals)
+      val sc = spark.sparkContext
+      // only jobs started from this thread carry the marker
+      val marker = "graft.test.render"
+      val jobs = new java.util.concurrent.atomic.AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty(marker) != null)) jobs.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setLocalProperty(marker, "1")
+      val xml =
+        try {
+          val x = Report.renderJunitXml(fused.totals, fused.report)
+          org.apache.spark.GraftListenerGlue.drain(sc)
+          x
+        } finally {
+          sc.setLocalProperty(marker, null)
+          sc.removeSparkListener(listener)
+        }
+      assert(jobs.get == 0, "rendering a clean report from its totals starts no Spark job")
+      assert(!xml.contains("<failure") && xml.contains("<testsuite name=\"referential\""), xml)
+      assertRendersFromTotals(fused)
+    } finally fused.keyed.unpersist()
+  }
+
+  test("compareData unpersists its keyed frame when a lookup dimension fails") {
+    val unavailable = udf { (g: String) =>
+      if (g != null) throw new IllegalStateException("dimension unavailable")
+      g
+    }
+    val broken = Seq("g1").toDF("g").select(unavailable(col("g")).as("g_code"))
+    // other specs of this session may have left frames cached
+    spark.catalog.clearCache()
+    val e = intercept[Exception](Report.compareData("t", expected, loaded, keyCols,
+      Seq("num"), specColumns, Seq(("grp", broken, Seq("grp" -> "g_code")))))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(c => Option(c.getMessage).exists(_.contains("dimension unavailable"))), e)
+    assert(spark.sharedState.cacheManager.isEmpty, "compareData left its keyed frame cached")
   }
 }

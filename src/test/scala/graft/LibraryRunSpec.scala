@@ -158,6 +158,38 @@ class LibraryRunSpec extends AnyFunSuite {
     assert(result.report.filter(col("status") === "failed").count() == 0, result.junitXml)
   }
 
+  test("library run completes with a route that matches no rows") {
+    val rawDir = java.nio.file.Files.createTempDirectory("lib_raw_none")
+    val wh = java.nio.file.Files.createTempDirectory("lib_wh_none").toString
+    writeRaw(rawDir, "F_20240101.csv", "", 1 to 5)
+    import spark.implicits._
+    val dim = (1 to 5).map(i => (i.toString, s"name$i")).toDF("k", "nm")
+    val cfg = LibraryConfig(
+      rawPath = rawDir.toString + "/*.csv",
+      delimiter = "|",
+      rawColumns = Seq("id", "cnt"),
+      skipHeader = 1, skipFooter = 0, ignoreLines = Set(),
+      rules = Seq(
+        FromFilename("day", "F_(\\d{8})\\.csv", 1),
+        Derived("cntn", col("cnt").cast("long")),
+        Lookup("id_name", dim, Seq("id" -> "k"), "nm", lit("?"))),
+      tagRules = Seq(),
+      routes = Seq(
+        TableRoute("all", col("cntn").isNotNull, Seq("day", "id", "cntn")),
+        TableRoute("none", col("cnt") === "none", Seq("day", "id", "cntn"))),
+      partitionCol = "day",
+      warehouseDir = wh)
+    val result = LibraryRun.run(spark, cfg, keyCols = Seq("day", "id"))
+    assert(result.tables("all").count() == 5 && result.tables("none").count() == 0)
+    assert(result.tables("none").schema == result.tables("all").schema)
+    val noneCases = result.report
+      .filter(col("test_name") === "none" || col("test_name").startsWith("none "))
+      .select("suite", "status").collect().map(r => r.getString(0) -> r.getString(1)).toSet
+    assert(noneCases == Set("missing_records", "value_diffs", "missing_columns", "referential")
+      .map(_ -> "passed"), noneCases)
+    assert(!result.junitXml.contains("<failure"), result.junitXml)
+  }
+
   test("library run job budget: no listing job for parse, a bounded report") {
     import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
     // 36 tiny files, one day each: past the 32-path threshold, so
@@ -230,7 +262,9 @@ class LibraryRunSpec extends AnyFunSuite {
       s"parse lists the feed's one directory on the driver: $byPhase")
     assert(byPhase.getOrElse("LibraryRun readback", 0) <= 2,
       s"readback lists the warehouse once and infers its schema once: $byPhase")
-    assert(byPhase.getOrElse("LibraryRun report", 0) <= 15, s"report job budget: $byPhase")
+    // compareData's keyed count and referential collect; a clean
+    // report renders its XML with no job
+    assert(byPhase.getOrElse("LibraryRun report", 0) <= 8, s"report job budget: $byPhase")
   }
 
   test("library run stream lists its feed on the driver and loads only the glob's files") {
