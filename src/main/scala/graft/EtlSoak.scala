@@ -30,9 +30,13 @@ import graft.etl.{ChillPipeline, Derived, FieldRule, FromFilename, FromTag, Libr
   *      feed.
   *   4. PLAN — asserts the `_file`-keyed slicing machinery never
   *      exchanges the feed body across files (`Exchange
-  *      hashpartitioning(_file` must not appear; the per-(split,file)
-  *      offsets must come back as a broadcast join) — the per-file
-  *      window design argued in SURVEY §5, now checked at soak scale.
+  *      hashpartitioning(_file` must not appear). A feed whose files
+  *      are each read whole by one task is sliced and tagged in the
+  *      scan's own tasks, so its plan must hold no join at all; a feed
+  *      with split files must bring its per-(split,file) offsets back
+  *      as a broadcast join, with at most the tag capture's exchange
+  *      above a tag filter — the per-file design argued in SURVEY §5,
+  *      now checked at soak scale.
   *
   * Output: one JSON line per run + ETL_SOAK artifact file
   * (SPARK_GRAFT_SOAK_OUT), one row per family with wall seconds, row
@@ -159,35 +163,40 @@ object EtlSoak {
     val fams = scala.collection.mutable.ArrayBuffer[Fam]()
     var planViolations = 0
 
-    // The body must NEVER exchange on _file; the one legitimate _file
+    // The body must NEVER exchange on _file. A whole-file feed
+    // (ChillPipeline.readsWholeFiles) is parsed in the scan's own tasks
+    // and joins nothing. For split files, the one legitimate _file
     // exchange is tag capture (withTagColumnsFrom's min_by groups the
     // tag-FILTERED lines per file — ≈1 row per file, the dimension-
     // sized broadcast input), so a family with tag rules is allowed
-    // exactly that many, and the tag filter must be visible in-plan.
-    def assertNoFileExchange(df: DataFrame, fam: String,
-                             allowedTagExchanges: Int = 0): Unit = {
+    // exactly that many, the tag filter must be visible in-plan, and
+    // the per-(split,file) offsets must come back as a broadcast join.
+    def assertNoFileExchange(df: DataFrame, fam: String, wholeFiles: Boolean,
+                             allowedTagExchanges: Int): Unit = {
+      def violation(msg: String): Unit = {
+        planViolations += 1
+        println(s"PLAN VIOLATION [$fam]: $msg")
+      }
       val p = df.queryExecution.executedPlan.toString
       val n = "Exchange hashpartitioning\\(_file".r.findAllIn(p).length
-      if (n > allowedTagExchanges) {
-        planViolations += 1
-        println(s"PLAN VIOLATION [$fam]: $n _file exchanges " +
-          s"(allowed $allowedTagExchanges tag-capture) — feed body exchanged on _file")
-      }
-      if (allowedTagExchanges > 0 && !p.contains("Contains(value")) {
-        planViolations += 1
-        println(s"PLAN VIOLATION [$fam]: tag exchange without an upstream " +
-          "tag filter — it would carry the whole body")
-      }
-      if (!p.contains("BroadcastHashJoin")) {
-        planViolations += 1
-        println(s"PLAN VIOLATION [$fam]: per-(split,file) offsets not broadcast")
+      if (wholeFiles) {
+        if (n > 0) violation(s"$n _file exchanges — feed body exchanged on _file")
+        if (p.contains("Join")) violation("a whole-file feed joined instead of parsing in its scan")
+      } else {
+        if (n > allowedTagExchanges)
+          violation(s"$n _file exchanges (allowed $allowedTagExchanges tag-capture) — " +
+            "feed body exchanged on _file")
+        if (allowedTagExchanges > 0 && !p.contains("Contains(value"))
+          violation("tag exchange without an upstream tag filter — it would carry the whole body")
+        if (!p.contains("BroadcastHashJoin")) violation("per-(split,file) offsets not broadcast")
       }
     }
 
-    def run(name: String, note: String)(parsed: => DataFrame, expected: DataFrame,
-                                        files: Long, allowedTagExchanges: Int = 0): Unit = {
+    def run(name: String, note: String, feed: String)(parsed: => DataFrame, expected: DataFrame,
+                                                      files: Long, allowedTagExchanges: Int = 0): Unit = {
       val got = parsed
-      assertNoFileExchange(got, name, allowedTagExchanges)
+      assertNoFileExchange(got, name,
+        ChillPipeline.readsWholeFiles(ChillPipeline.textLines(spark, feed)), allowedTagExchanges)
       val t0 = System.nanoTime()
       val rows = got.count()
       val wall = (System.nanoTime() - t0) / 1e9
@@ -198,7 +207,7 @@ object EtlSoak {
     }
 
     // A1+A3+A4: delimiter parse, filename fields, tag field
-    run("a1_csv", "delimiter+slice+ignore+tag+filename")(
+    run("a1_csv", "delimiter+slice+ignore+tag+filename", s"$work/a1/*.csv")(
       parsed = {
         val lines = ChillPipeline.textLines(spark, s"$work/a1/*.csv")
         val raw = ChillPipeline.rawCsvFrom(spark, lines, "|",
@@ -218,7 +227,7 @@ object EtlSoak {
       files = fileCount("a1"), allowedTagExchanges = 1)
 
     // A12: fixed-width positional parse
-    run("fixed_width", "positional substring parse")(
+    run("fixed_width", "positional substring parse", s"$work/fw/*.fw")(
       parsed = ChillPipeline.rawFixedWidth(spark, s"$work/fw/*.fw", Seq(
           ChillPipeline.FixedWidthCol("event_id", 1, 12),
           ChillPipeline.FixedWidthCol("event_type", 13, 10),
@@ -231,7 +240,7 @@ object EtlSoak {
       files = fileCount("fw"))
 
     // A13: quoted CSV round-trip (embedded delimiter + doubled quote)
-    run("csv_quoted", "RFC4180 quote/escape round-trip")(
+    run("csv_quoted", "RFC4180 quote/escape round-trip", s"$work/qc/*.csv")(
       parsed = ChillPipeline.rawCsvQuoted(spark, s"$work/qc/*.csv",
           Seq("event_id", "payload", "cents"), 2, 1, Set.empty)
         .groupBy(col("payload"))
@@ -243,7 +252,7 @@ object EtlSoak {
       files = fileCount("qc"))
 
     // A14: JSON-lines schema-on-read (missing fields + corrupt gate)
-    run("jsonl", "schema-on-read; corrupt lines quarantined")(
+    run("jsonl", "schema-on-read; corrupt lines quarantined", s"$work/jl/*.jsonl")(
       parsed = {
         val p = ChillPipeline.rawJsonLines(spark, s"$work/jl/*.jsonl",
           org.apache.spark.sql.types.StructType.fromDDL("e BIGINT, t STRING, c BIGINT"),

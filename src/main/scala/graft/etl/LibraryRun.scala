@@ -54,8 +54,13 @@ object LibraryRun {
     * (the reference's CONF_KEY_FIELDS + DATETIME).
     *
     * The raw files are listed once: one `(_file, value)` line set
-    * feeds both the line slice and the tag columns. Each routed table
-    * is compared by ONE [[Report.compareData]] call — a single keyed
+    * feeds both the line slice and the tag columns. When its files are
+    * each read whole by one task (the Chill feed of many small files),
+    * both run inside the tasks that build the transformed cache — no
+    * chunk-statistics or tag-line side job runs before a route's write,
+    * whose jobs are then the lookups' broadcasts, the cache build, the
+    * rebalance and the write itself (see [[ChillPipeline.sliceLines]]).
+    * Each routed table is compared by ONE [[Report.compareData]] call — a single keyed
     * aggregate of expected vs loaded rows, persisted alongside the
     * transformed feed, from which every count, missing-key and
     * summary case and the value diffs of keys with one row per side
@@ -209,6 +214,11 @@ object LibraryRun {
     * the loaded files under the same paths. Any other raw path, or a
     * plain root directory that does not exist yet, streams through
     * the glob source itself.
+    *
+    * A micro-batch is sliced by chunk statistics and tagged by a
+    * broadcast join ([[ChillPipeline.sliceLines]]), not in one pass:
+    * `foreachBatch` hands over a `LogicalRDD`, whose files the driver
+    * cannot see, so it cannot know each is read whole by one task.
     */
   def stream(spark: SparkSession, cfg: LibraryConfig)
       : org.apache.spark.sql.streaming.DataStreamWriter[org.apache.spark.sql.Row] = {

@@ -68,6 +68,81 @@ class EtlSourceSpec extends AnyFunSuite {
       Set(("1", "10"), ("2", "20")))
   }
 
+  test("rawCsv derives header columns without the file's UTF-8 byte order mark") {
+    val d = java.nio.file.Files.createTempDirectory("bompm")
+    java.nio.file.Files.writeString(d.resolve("b.csv"), "\uFEFFid|cnt\r\n1|10\r\n2|20")
+    val df = ChillPipeline.rawCsv(spark, d.toString + "/*.csv", "|",
+      Seq.empty, skipHeader = 0, skipFooter = 0, ignoreLines = Set.empty)
+    // the text scan strips the mark from the line it returns
+    assert(spark.read.text(d.toString).head().getString(0) == "id|cnt")
+    assert(df.columns.toSeq == Seq("_file", "id", "cnt"))
+    assert(df.select("id", "cnt").collect().map(r => (r.getString(0), r.getString(1))).toSet ==
+      Set(("1", "10"), ("2", "20")))
+  }
+
+  private def planOf(df: org.apache.spark.sql.DataFrame): String =
+    df.queryExecution.executedPlan.toString
+
+  test("one-pass parse of whole files equals the chunk path, lines and tags") {
+    val d = java.nio.file.Files.createTempDirectory("onepass")
+    def write(name: String, body: String): Unit =
+      java.nio.file.Files.writeString(d.resolve(name), body)
+    write("cr.csv", "H1\rH2\r#TAG=cr\ra\rb\rF")
+    write("crlf.csv", "H1\r\nH2\r\nx1\r\n#TAG=crlf\r\nx2\r\nF\r\n")
+    write("bom.csv", "\uFEFF#TAG=bom\nH2\nb1\nb2\nF")
+    write("empty.csv", "")
+    write("short.csv", "only\ntwo")
+    write("ign.csv", "H1\nH2\nIGNORE\nk1\nIGNORE\nk2\nF") // no tag line
+    write("rep.csv", "#TAG=first\nH2\nr1\n#TAG=second\nr2\nF")
+    write("foot.csv", "H1\nH2\nf1\nf2\n#TAG=foot")
+    val gz = new java.util.zip.GZIPOutputStream(
+      java.nio.file.Files.newOutputStream(d.resolve("z.csv.gz")))
+    try gz.write("H1\nH2\n#TAG=gz\ng1\ng2\nF\n".getBytes("UTF-8")) finally gz.close()
+    val tagRule = FromTag("t", "#TAG", identity)
+    def parse(): (org.apache.spark.sql.DataFrame, Map[(String, String, String), Int]) = {
+      val lines = ChillPipeline.textLines(spark, d.toString + "/*")
+      val df = ChillPipeline.withTagColumnsFrom(lines,
+        ChillPipeline.slicedBody(lines, 2, 1, Set("IGNORE")), Seq(tagRule))
+      val rows = df.select("_file", "value", "_tag_t").collect()
+        .map(r => (r.getString(0).split('/').last, r.getString(1), r.getString(2)))
+      (df, rows.groupBy(identity).view.mapValues(_.length).toMap)
+    }
+    val (onePass, got) = parse()
+    assert(ChillPipeline.readsWholeFiles(ChillPipeline.textLines(spark, d.toString + "/*")))
+    val p = planOf(onePass)
+    assert(!p.contains("Exchange") && !p.contains("Join"), s"one-pass parse plan:\n$p")
+    val (chunked, want) = withSplitSize(8) {
+      assert(!ChillPipeline.readsWholeFiles(ChillPipeline.textLines(spark, d.toString + "/*")))
+      parse()
+    }
+    assert(planOf(chunked).contains("BroadcastHashJoin"), planOf(chunked))
+    assert(got == want)
+    def rows(file: String, tag: String, values: String*) = values.map(v => (file, v, tag))
+    val expected = Seq(
+      rows("cr.csv", "#TAG=cr", "#TAG=cr", "a", "b"),
+      rows("crlf.csv", "#TAG=crlf", "x1", "#TAG=crlf", "x2"),
+      rows("bom.csv", "#TAG=bom", "b1", "b2"),
+      rows("ign.csv", null, "k1", "k2"),
+      rows("rep.csv", "#TAG=first", "r1", "#TAG=second", "r2"),
+      rows("foot.csv", "#TAG=foot", "f1", "f2"),
+      rows("z.csv.gz", "#TAG=gz", "#TAG=gz", "g1", "g2")).flatten
+    assert(got == expected.map(_ -> 1).toMap)
+  }
+
+  test("a whole-file slice throws when its files split before the action") {
+    val d = java.nio.file.Files.createTempDirectory("onepassguard")
+    for (f <- 1 to 3)
+      java.nio.file.Files.writeString(d.resolve(s"f$f.csv"),
+        (1 to 12).map(i => s"r$i|$f").mkString("\n"))
+    val df = ChillPipeline.rawCsv(spark, d.toString + "/*.csv", "|",
+      Seq("id", "f"), skipHeader = 1, skipFooter = 1, ignoreLines = Set.empty)
+    val e = withSplitSize(16)(intercept[org.apache.spark.SparkException](df.collect()))
+    assert(Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      .exists(t => String.valueOf(t.getMessage).contains("sliceLines: ")), e)
+    // the same frame slices exactly again once the files are whole
+    assert(df.count() == 30)
+  }
+
   test("textLines reads the lines spark.read.text reads, for every path form") {
     import org.apache.spark.sql.execution.datasources.{HadoopFsRelation, LogicalRelation}
     val root = java.nio.file.Files.createTempDirectory("linespm")
@@ -203,21 +278,16 @@ class EtlSourceSpec extends AnyFunSuite {
     val lines = (1 to 200).map(i => f"L$i%03d|$i%d")
     java.nio.file.Files.writeString(d.resolve("big.csv"), lines.mkString("\n"))
     java.nio.file.Files.writeString(d.resolve("small.csv"), "H|0\nS1|1\nS2|2\nF|0")
-    val prevMax = spark.conf.get("spark.sql.files.maxPartitionBytes")
-    val prevOpen = spark.conf.get("spark.sql.files.openCostInBytes")
-    try {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", "64")
-      spark.conf.set("spark.sql.files.openCostInBytes", "0")
+    withSplitSize(64) {
       val df = ChillPipeline.rawCsv(spark, d.toString + "/*.csv", "|",
         Seq("id", "n"), skipHeader = 1, skipFooter = 1, ignoreLines = Set())
       val scan = df.queryExecution.executedPlan.toString
       assert(df.rdd.getNumPartitions > 4, s"file did not split:\n$scan")
+      // small.csv is whole, but one split file sends the feed down the chunk path
+      assert(scan.contains("BroadcastHashJoin"), s"expected the chunk path:\n$scan")
       val got = df.select("id").collect().map(_.getString(0)).toSet
       val want = (2 to 199).map(i => f"L$i%03d").toSet ++ Set("S1", "S2")
       assert(got == want)
-    } finally {
-      spark.conf.set("spark.sql.files.maxPartitionBytes", prevMax)
-      spark.conf.set("spark.sql.files.openCostInBytes", prevOpen)
     }
   }
 

@@ -260,6 +260,10 @@ class LibraryRunSpec extends AnyFunSuite {
       s"every cycle job carries a LibraryRun description: $byPhase")
     assert(byPhase.getOrElse("LibraryRun parse", 0) == 0,
       s"parse lists the feed's one directory on the driver: $byPhase")
+    // the feed's files are read whole, so the slice runs in the cache
+    // build's own tasks: the two lookup broadcasts, the cache build,
+    // the rebalance and the write
+    assert(byPhase.getOrElse("LibraryRun load", 0) <= 5, s"load job budget: $byPhase")
     assert(byPhase.getOrElse("LibraryRun readback", 0) <= 2,
       s"readback lists the warehouse once and infers its schema once: $byPhase")
     // compareData's keyed count and referential collect; a clean

@@ -28,6 +28,19 @@ object SparkTestSession {
     s
   }
   val sf = "/root/testdata/sf0.001"
+
+  /** Runs `body` with `spark.sql.files.maxPartitionBytes` = `maxBytes`
+    * and a zero open cost, so files longer than `maxBytes` split.
+    */
+  def withSplitSize[T](maxBytes: Long)(body: => T): T = {
+    val keys = Seq("spark.sql.files.maxPartitionBytes", "spark.sql.files.openCostInBytes")
+    val prev = keys.map(spark.conf.get)
+    try {
+      spark.conf.set(keys(0), maxBytes.toString)
+      spark.conf.set(keys(1), "0")
+      body
+    } finally keys.zip(prev).foreach { case (k, v) => spark.conf.set(k, v) }
+  }
 }
 
 /** Smoke + semantic specs for every SparkEntry query at sf0.001. */

@@ -150,14 +150,24 @@ class PlanAuditSpec extends AnyFunSuite {
     val dir = java.nio.file.Files.createTempDirectory("sliceaudit")
     java.nio.file.Files.writeString(dir.resolve("a.csv"),
       (1 to 50).map(i => s"$i|x").mkString("\n"))
-    val df = graft.etl.ChillPipeline.rawCsv(spark, dir.toString + "/*.csv", "|",
+    def sliced() = graft.etl.ChillPipeline.rawCsv(spark, dir.toString + "/*.csv", "|",
       Seq("id", "v"), skipHeader = 2, skipFooter = 1, ignoreLines = Set())
-    val p = df.queryExecution.executedPlan.toString
-    assert(!p.contains("Exchange hashpartitioning(_file"),
-      s"feed body must not shuffle on _file:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"per-split offsets must broadcast back onto the scan:\n$p")
-    assert(df.count() == 47)
+    // a file read whole by one task is sliced in the scan's own tasks
+    val whole = sliced()
+    val p = whole.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      s"a whole-file slice must neither exchange nor join:\n$p")
+    assert(whole.count() == 47)
+    // a split file: per-split offsets broadcast back onto the scan
+    withSplitSize(64) {
+      val split = sliced()
+      val p = split.queryExecution.executedPlan.toString
+      assert(!p.contains("Exchange hashpartitioning(_file"),
+        s"feed body must not shuffle on _file:\n$p")
+      assert(p.contains("BroadcastHashJoin"),
+        s"per-split offsets must broadcast back onto the scan:\n$p")
+      assert(split.count() == 47)
+    }
   }
 
   test("many-file raw parse with tag + filename rules: body never " +
@@ -168,27 +178,42 @@ class PlanAuditSpec extends AnyFunSuite {
         (Seq("HDR|x|0", s"#REGION=R${f * 10}") ++
           (1 to 30).map(i => s"$i|t$i|${i * 7}") :+ "EOF|x|0").mkString("\n"))
     }
-    val raw = graft.etl.ChillPipeline.rawCsv(spark, dir.toString + "/*.csv", "|",
-      Seq("id", "t", "cents"), skipHeader = 2, skipFooter = 1, ignoreLines = Set())
     val tagRule = graft.etl.FromTag("region", "#REGION",
       c => org.apache.spark.sql.functions.regexp_extract(c, "#REGION=(R\\d+)", 1))
-    val df = graft.etl.FieldRule.applyAll(
-      graft.etl.ChillPipeline.withTagColumns(spark, dir.toString + "/*.csv", raw,
-        Seq(tagRule)),
-      Seq(graft.etl.FromFilename("node_id", "NODE(\\d+)_", 1), tagRule))
-    val p = df.queryExecution.executedPlan.toString
-    val fileExchanges = "Exchange hashpartitioning\\(_file".r.findAllIn(p).length
-    assert(fileExchanges <= 1,
-      s"feed body must not shuffle on _file (1 tag-capture exchange allowed):\n$p")
-    assert(p.contains("Contains(value"),
-      s"the _file exchange must sit above the tag FILTER, not the body:\n$p")
-    assert(p.contains("BroadcastHashJoin"),
-      s"per-split offsets and per-file tags must broadcast:\n$p")
+    def parsed() = {
+      val raw = graft.etl.ChillPipeline.rawCsv(spark, dir.toString + "/*.csv", "|",
+        Seq("id", "t", "cents"), skipHeader = 2, skipFooter = 1, ignoreLines = Set())
+      graft.etl.FieldRule.applyAll(
+        graft.etl.ChillPipeline.withTagColumns(spark, dir.toString + "/*.csv", raw,
+          Seq(tagRule)),
+        Seq(graft.etl.FromFilename("node_id", "NODE(\\d+)_", 1), tagRule))
+    }
     // semantic check: every row carries its file's node id + region
-    val rows = df.groupBy("node_id", "region")
-      .count().collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
-    assert(rows.length == 20 && rows.forall { case (n, reg, c) =>
-      reg == s"R${n.toInt * 10}" && c == 30 })
+    def check(df: org.apache.spark.sql.DataFrame): Unit = {
+      val rows = df.groupBy("node_id", "region")
+        .count().collect().map(r => (r.getString(0), r.getString(1), r.getLong(2)))
+      assert(rows.length == 20 && rows.forall { case (n, reg, c) =>
+        reg == s"R${n.toInt * 10}" && c == 30 })
+    }
+    // files read whole by one task: slice and tags in the scan's own tasks
+    val whole = parsed()
+    val p = whole.queryExecution.executedPlan.toString
+    assert(!p.contains("Exchange") && !p.contains("Join"),
+      s"a whole-file parse must neither exchange nor join:\n$p")
+    check(whole)
+    // split files: the body still never exchanges on _file
+    withSplitSize(64) {
+      val split = parsed()
+      val p = split.queryExecution.executedPlan.toString
+      val fileExchanges = "Exchange hashpartitioning\\(_file".r.findAllIn(p).length
+      assert(fileExchanges <= 1,
+        s"feed body must not shuffle on _file (1 tag-capture exchange allowed):\n$p")
+      assert(p.contains("Contains(value"),
+        s"the _file exchange must sit above the tag FILTER, not the body:\n$p")
+      assert(p.contains("BroadcastHashJoin"),
+        s"per-split offsets and per-file tags must broadcast:\n$p")
+      check(split)
+    }
   }
 
   test("bm25 is join-free: literal stats, bounded top-k, no exchange of doc rows") {
