@@ -1,33 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    // shuffle width defaults to the thread count (right at graded
-    // scales); 100× soaks raise it so per-partition sorts stay
-    // spill-friendly — the local-mode analogue of sizing partitions
-    // to executor memory at cluster scale
-    val shuffle = sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shuffle)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // typed-aggregate scale guard: ObjectHashAggregate falls back to
-      // SORT-based aggregation after only 128 in-memory keys (the
-      // Spark default) — for small-state aggregates like the top-k
-      // heaps that is a catastrophic cliff (the 100x soak measured the
-      // kNN-graph top-k stage sorting ~300M scored rows instead of
-      // heap-folding them). 16k keys covers every per-task key density
-      // in the suite while bounding the map even for the BIG-state
-      // aggregates (HyperBall's 4KB HLL registers: 16k x 4KB = 64MB
-      // per task — a 256k threshold OOM'd exactly there; states
-      // beyond the threshold degrade gracefully to the sort path)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     // fail fast on testdata schema drift (round-5 lesson)
     Tables.validate(spark, sfDir)
     // opt-in per-query shuffle/spill accounting (SPARK_GRAFT_METRICS=1):
@@ -114,20 +89,7 @@ object Bench {
         }
       } catch {
         case e: Throwable =>
-          val root = {
-            var c: Throwable = e
-            while (c.getCause != null && c.getCause != c) c = c.getCause
-            c
-          }
-          // message + the root cause's top frames: a soak artifact
-          // whose failure names only "NPE: buf is null" costs the
-          // next reader a full reproduce cycle (round-9 lesson)
-          val frames = root.getStackTrace.take(6)
-            .map(_.toString).mkString(" <- ")
-          failReasons.getOrElseUpdate(name,
-            (root.getClass.getSimpleName + ": " +
-              String.valueOf(root.getMessage) + " @ " + frames)
-              .replaceAll("\\s+", " ").take(900))
+          failReasons.getOrElseUpdate(name, Json.rootCause(e))
           return -1.0
       }
       (System.nanoTime() - t0) / 1e9
@@ -183,37 +145,30 @@ object Bench {
     // cost r12 its automated PERF comparison (VERDICT r12 item 4).
     // Formatting only; the measured values are unchanged.
     def fmt3(v: Double): String = f"$v%.3f"
-    val qs = results.map { case (k, v) => s"\"" + k + "\":" + fmt3(v) }
+    val qs = results.map { case (k, v) => Json.str(k) + ":" + fmt3(v) }
       .mkString("{", ",", "}")
     // explicit failure accounting (ADVICE r5): -1.0 entries summarized
     // so the artifact is self-describing even if the log tail truncates
     val failed = results.collect { case (k, v) if v < 0 => k }.toSeq.sorted
-    val failedJson = failed.map("\"" + _ + "\"").mkString("[", ",", "]")
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
+    val failedJson = failed.map(Json.str).mkString("[", ",", "]")
     val errorsJson =
       if (failReasons.isEmpty) ""
       else failReasons.toSeq.sortBy(_._1)
-        .map { case (k, v) => jstr(k) + ":" + jstr(v) }
+        .map { case (k, v) => Json.str(k) + ":" + Json.str(v) }
         .mkString(""","errors":{""", ",", "}")
     val total = if (results.nonEmpty) results.values.filter(_ >= 0).sum else 0.0
     val metricsJson = if (metricsOn) {
       val sh = shufByQuery.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+        .map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
       val sp = spillByQuery.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+        .map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
       val st = storagePeakByQuery.toSeq.sortBy(_._1)
-        .map { case (k, v) => "\"" + k + "\":" + v }.mkString("{", ",", "}")
+        .map { case (k, v) => Json.str(k) + ":" + v }.mkString("{", ",", "}")
       s""","shuffle_bytes":$sh,"spill_bytes":$sp,"storage_peak_bytes":$st"""
     } else ""
     val sentinelAfter = Sentinel.seconds()
     val sentinelJson = f""","sentinel_before_s":$sentinelBefore%.3f,"sentinel_after_s":$sentinelAfter%.3f,"sentinel_nominal_s":${Sentinel.NominalS}%.3f"""
-    val line = s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":$qs,"failed_count":${failed.size},"failed":$failedJson$errorsJson$metricsJson$sentinelJson,"sf":"$sfDir"}"""
+    val line = s"""{"metric":"total","value":${fmt3(total)},"unit":"sec","queries":$qs,"failed_count":${failed.size},"failed":$failedJson$errorsJson$metricsJson$sentinelJson,"sf":${Json.str(sfDir)}}"""
     println(line)
     // self-written complete artifact: the driver's log capture
     // truncates the tail, so the full per-query map is also committed

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.etl.{ChillPipeline, Derived, FieldRule, FromFilename, FromTag, LibraryConfig, LibraryRun, TableRoute}
@@ -52,25 +52,15 @@ object EtlSoak {
                                wallS: Double, mismatch: Long, note: String) {
     def verdict: String = if (mismatch == 0) "pass" else "FAIL"
     def json: String =
-      s""""$name":{"files":$files,"rows":$rows,"wall_s":${math.round(wallS * 100) / 100.0},""" +
-        s""""mismatch":$mismatch,"verdict":"$verdict","note":"$note"}"""
+      s"""${Json.str(name)}:{"files":$files,"rows":$rows,"wall_s":${math.round(wallS * 100) / 100.0},""" +
+        s""""mismatch":$mismatch,"verdict":"$verdict","note":${Json.str(note)}}"""
   }
 
   def main(args: Array[String]): Unit = {
     val sfDir = if (args.length > 0) args(0) else "localdata/sf10"
     val work = if (args.length > 1) args(1) else "localdata/etl100"
     val nodes = if (args.length > 2) args(2).toInt else 32
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     import spark.implicits._
 
     Tables.validate(spark, sfDir)
@@ -369,7 +359,7 @@ object EtlSoak {
 
     // ---- artifact ----------------------------------------------------
     val nFail = fams.count(_.mismatch != 0) + planViolations
-    val line = s"""{"soak":"etl_many_file","sf_dir":"$sfDir","nodes":$nodes,""" +
+    val line = s"""{"soak":"etl_many_file","sf_dir":${Json.str(sfDir)},"nodes":$nodes,""" +
       s""""plan_violations":$planViolations,"n_fail":$nFail,""" +
       s""""families":{${fams.map(_.json).mkString(",")}}}"""
     println(line)

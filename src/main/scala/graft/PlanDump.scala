@@ -1,22 +1,15 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dump formatted physical plans for the headline queries →
   * PLANS.md, the artifact behind the `.explain` audit in SURVEY §5.
-  * Usage: runMain graft.PlanDump <sfDir> <outFile>
+  * An optional comma-separated query list replaces the headline list
+  * (e.g. a before/after plan pair for one optimization).
+  * Usage: runMain graft.PlanDump <sfDir> <outFile> [q1,q2,...]
   */
 object PlanDump {
   def main(args: Array[String]): Unit = {
-    val Array(sfDir, outFile) = args
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val (sfDir, outFile) = (args(0), args(1))
+    val spark = Session.build()
     val headline = Seq(
       "q_etl_pipeline", "q_rollup_5m", "q_rollup_hourly", "q_lookup_enrich",
       "q_recon_counts", "q_recon_missing", "q_recon_diffs_multi",
@@ -113,7 +106,8 @@ object PlanDump {
         "(shuffle_hash gathers, bloom-pruned scans, the exchange-free\n" +
         "wedge self-join) are captured through IterState's probe and\n" +
         "pinned by PlanAuditSpec's round-plan audits instead.\n")
-    headline.foreach { name =>
+    val names = if (args.length > 2) args(2).split(",").toSeq else headline
+    names.foreach { name =>
       val df = SparkEntry.queries(name)(spark, sfDir)
       sb.append(s"\n## $name\n\n```\n")
       sb.append(df.queryExecution.explainString(

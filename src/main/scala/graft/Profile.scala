@@ -1,30 +1,20 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.scheduler._
 import scala.collection.mutable
 
 /** Per-job profiler for a single query: runs one warmup pass, then a
   * measured pass with a listener that records every job's wall, stage
   * count, task count, and shuffle bytes — the measurement tool behind
-  * OPTIMIZATION_r12's "where does the wall go" numbers. Mirrors
-  * Bench's session config exactly so the walls are comparable.
+  * OPTIMIZATION_r12's "where does the wall go" numbers. Runs on the
+  * shared [[Session]], like Bench, so the walls are comparable at
+  * equal `SPARK_GRAFT_CPUS`.
   * Usage: runMain graft.Profile <sfDir> <query>[,<query>...]
   */
 object Profile {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, names) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     case class Job(id: Int, desc: String, t0: Long) {
       var t1: Long = 0L
       var stages = 0

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 import graft.dedup.Dedup
@@ -48,7 +48,7 @@ object RecallSoak {
     def recall: Double = if (nTrue == 0) 1.0 else nFound.toDouble / nTrue
     def pass: Boolean = recall >= gate
     def json: String =
-      s""""$name":{"n_true":$nTrue,"n_found":$nFound,"n_candidates":$nCand,""" +
+      s"""${Json.str(name)}:{"n_true":$nTrue,"n_found":$nFound,"n_candidates":$nCand,""" +
         f""""recall":$recall%.6f,"gate":$gate,"wall_s":$wallS%.1f,"pass":$pass}"""
   }
 
@@ -58,17 +58,7 @@ object RecallSoak {
       else sys.env.getOrElse("SPARK_GRAFT_RECALL_OUT", "/root/repo/RECALL_latest.json")
     // host-drift sentinel bracketing the run (see graft.Sentinel)
     val sentinelBefore = Sentinel.seconds()
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_SHUFFLE", cpus))
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
     Tables.validate(spark, sfDir)
     val docs = Tables.documents(spark, sfDir)
 
@@ -139,8 +129,8 @@ object RecallSoak {
     val gateNote = "gates encode each miner's measured at-scale recall floor; " +
       "a one-pair drop below the floor IS the regression this artifact catches " +
       "- re-measure before moving any gate"
-    val line = s"""{"soak":"dedup_recall","sf_dir":"$sfDir","n_fail":$nFail,""" +
-      s""""gate_note":"$gateNote",""" +
+    val line = s"""{"soak":"dedup_recall","sf_dir":${Json.str(sfDir)},"n_fail":$nFail,""" +
+      s""""gate_note":${Json.str(gateNote)},""" +
       f""""sentinel_before_s":$sentinelBefore%.3f,""" +
       f""""sentinel_after_s":${Sentinel.seconds()}%.3f,""" +
       f""""sentinel_nominal_s":${Sentinel.NominalS}%.3f,""" +

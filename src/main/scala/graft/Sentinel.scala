@@ -38,9 +38,6 @@ object Sentinel {
     if (h == 0L) dt + 1e-12 else dt
   }
 
-  /** JSON fragment `"sentinel_<tag>_s":<wall>` for artifact lines. */
-  def jsonField(tag: String): String = f""""sentinel_${tag}_s":${seconds()}%.3f"""
-
   /** Standalone runner (`tools/jrun.sh graft.Sentinel [n]`): prints n
     * kernel walls, one per line — the quick manual probe for "is the
     * host in a slow window right now".

@@ -62,15 +62,8 @@ object SoakData {
         names
       }
     val mult = multStr.toInt
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    nOutFiles = math.min(256, math.max(cpus.toInt, mult))
+    val spark = Session.build()
+    nOutFiles = math.min(256, math.max(spark.sparkContext.defaultParallelism, mult))
 
     if (wanted("documents")) writeDocuments(spark, srcDir, outDir, mult, mode)
     if (wanted("embeddings")) writeEmbeddings(spark, srcDir, outDir, mult)

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Sustained micro-batch soak for the streaming family.
@@ -61,21 +61,14 @@ object StreamSoak {
     val outPath = args(1)
     val nFiles = if (args.length > 2) args(2).toInt else 1000
     val compactEvery = if (args.length > 3) args(3).toInt else 200
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "16")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.session.timeZone", "UTC")
-      // keep every progress event: the state-size series IS the
-      // artifact. The floor covers legs whose batch count is NOT
-      // nFiles-derived (the alarm leg's (day, family) slicing can
-      // exceed a small smoke nFiles — the r12 smoke caught exactly
-      // that as a silently truncated progress buffer)
-      .config("spark.sql.streaming.numRecentProgressUpdates",
-        math.max(nFiles, 2048) + 64)
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
+    // keep every progress event: the state-size series IS the
+    // artifact. The floor covers legs whose batch count is NOT
+    // nFiles-derived (the alarm leg's (day, family) slicing can
+    // exceed a small smoke nFiles — the r12 smoke caught exactly
+    // that as a silently truncated progress buffer)
+    spark.conf.set("spark.sql.streaming.numRecentProgressUpdates",
+      (math.max(nFiles, 2048) + 64).toLong)
     import graft.streaming.EventStream
 
     // host-drift sentinel bracketing the whole soak (see graft.Sentinel)
@@ -129,16 +122,6 @@ object StreamSoak {
       picked.map { case (b, _, _, st, _) => s"[$b,$st]" }
         .mkString("[", ",", "]")
     }
-
-    // minimal JSON string escape (the Bench.jstr convention): paths
-    // with quotes/backslashes must not produce an invalid artifact
-    def jstr(s: String): String =
-      "\"" + s.flatMap {
-        case '"' => "\\\""
-        case '\\' => "\\\\"
-        case c if c < ' ' => " "
-        case c => c.toString
-      } + "\""
 
     // stage `df` as (up to) `nSlices` range-contiguous parquet files
     // with STRICTLY ASCENDING mtimes in range order — the in-order
@@ -208,8 +191,8 @@ object StreamSoak {
       }.toMap
 
     // The watermark arithmetic below was pinned EMPIRICALLY against
-    // Spark's observed behavior (per-batch progress + per-row replay,
-    // see the r12 WmProbe notes in BENCH_NOTES_r12.md):
+    // Spark's observed behavior (per-batch progress + per-row replay;
+    // StreamingSpec's lagged-watermark case keeps them pinned):
     //  - the LATE-EVENTS filter of batch b uses the PREVIOUS batch's
     //    displayed watermark (the eviction watermark advances a batch
     //    ahead of the late-row filter);
@@ -271,7 +254,7 @@ object StreamSoak {
 
     val sb = new StringBuilder
     sb.append("{")
-    sb.append(s""""src_dir":${jstr(srcDir)},"n_feed_files":$stagedFiles,""")
+    sb.append(s""""src_dir":${Json.str(srcDir)},"n_feed_files":$stagedFiles,""")
     sb.append(s""""feed_rows":$feedRows,""")
 
     // ---- 1. rollup maintenance + periodic compaction ----------------

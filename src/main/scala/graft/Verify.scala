@@ -1,34 +1,13 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      // non-ANSI: fingerprint/rolling-hash arithmetic relies on wrap-around
-      .config("spark.sql.ansi.enabled", "false")
-      // typed-aggregate scale guard: ObjectHashAggregate falls back to
-      // SORT-based aggregation after only 128 in-memory keys (the
-      // Spark default) — for small-state aggregates like the top-k
-      // heaps that is a catastrophic cliff (the 100x soak measured the
-      // kNN-graph top-k stage sorting ~300M scored rows instead of
-      // heap-folding them). 16k keys covers every per-task key density
-      // in the suite while bounding the map even for the BIG-state
-      // aggregates (HyperBall's 4KB HLL registers: 16k x 4KB = 64MB
-      // per task — a 256k threshold OOM'd exactly there; states
-      // beyond the threshold degrade gracefully to the sort path)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      // µs parquet timestamps so DuckDB reads the same instants back
-      .config("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Session.build()
+    // µs parquet timestamps so DuckDB reads the same instants back
+    spark.conf.set("spark.sql.parquet.outputTimestampType", "TIMESTAMP_MICROS")
     new java.io.File(outDir).mkdirs()
     // fail fast, in ONE place, if the driver regenerated testdata with
     // a schema this build doesn't accept (round-5 lesson)
@@ -44,29 +23,17 @@ object Verify {
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
       catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        failures(name) = Option(e.getMessage).getOrElse(e.getClass.getName).take(500)
+        failures(name) = Json.rootCause(e)
+        System.err.println(s"[verify] $name failed: ${failures(name)}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // self-describing artifact: a query that threw is recorded here, so
     // the correctness dump never silently shrinks (ADVICE r5)
     val errJson = failures
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${Json.str(k)}: ${Json.str(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/verify_errors.json"), errJson)
     if (failures.nonEmpty)
       System.err.println(s"[verify] ${failures.size} of ${SparkEntry.queries.size} queries FAILED: ${failures.keys.mkString(",")}")

@@ -922,9 +922,14 @@ object Dedup {
     * actually surfaces — the number to check before trusting an
     * approximate dedup pass at 100 TB, mirroring [[graft.ann.Ann.annRecall]]
     * on the ANN side. Both inputs are (doc_a, doc_b) pair tables;
-    * the overlap is one pair-key left join, and recall/precision are
-    * the two final divisions over exact BIGINT counts. Output is one
-    * row regardless of corpus size.
+    * the overlap is one pair-keyed aggregation over their flagged
+    * union, and recall/precision are the two final divisions over
+    * exact BIGINT counts. Output is one row regardless of corpus size.
+    *
+    * Contract: inputs are unique pairs with non-null doc ids, as the
+    * miners' grouped / distinct outputs are. A repeated pair counts
+    * once, and NULL ids group together as one pair that can match
+    * across the inputs, so null-filter raw pair tables first.
     */
   def blockingRecall(exactPairs: DataFrame, candidatePairs: DataFrame): DataFrame = {
     // ONE pass over each miner and NO pair join: flag-union the two

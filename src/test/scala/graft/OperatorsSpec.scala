@@ -5,28 +5,9 @@ import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 object SparkTestSession {
-  lazy val spark: SparkSession = {
-    val s = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.ansi.enabled", "false")
-      // typed-aggregate scale guard: ObjectHashAggregate falls back to
-      // SORT-based aggregation after only 128 in-memory keys (the
-      // Spark default) — for small-state aggregates like the top-k
-      // heaps that is a catastrophic cliff (the 100x soak measured the
-      // kNN-graph top-k stage sorting ~300M scored rows instead of
-      // heap-folding them). 16k keys covers every per-task key density
-      // in the suite while bounding the map even for the BIG-state
-      // aggregates (HyperBall's 4KB HLL registers: 16k x 4KB = 64MB
-      // per task — a 256k threshold OOM'd exactly there; states
-      // beyond the threshold degrade gracefully to the sort path)
-      .config("spark.sql.objectHashAggregate.sortBased.fallbackThreshold", "16384")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    s.sparkContext.setLogLevel("ERROR")
-    s
-  }
+  // a fixed width, not SPARK_GRAFT_CPUS: the specs' plan shapes and
+  // partition counts must not depend on the host's core count
+  lazy val spark: SparkSession = Session.build(4)
   val sf = "/root/testdata/sf0.001"
 
   /** Runs `body` with `spark.sql.files.maxPartitionBytes` = `maxBytes`

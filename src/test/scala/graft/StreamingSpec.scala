@@ -437,4 +437,60 @@ class StreamingSpec extends AnyFunSuite {
       assert(n == distinctIds, s"dedup produced $n rows, expected $distinctIds")
     } finally q.stop()
   }
+
+  test("watermarked operators filter late rows with the previous batch's watermark") {
+    // three files, one per trigger: batch 1 still filters with batch
+    // 0's initial (epoch) watermark, so batch 2 is the first whose
+    // lagged watermark (batch 1's, 12:10) trails its own (12:30)
+    import spark.implicits._
+    def at(hhmm: String) = java.sql.Timestamp.from(
+      java.time.Instant.parse(s"2024-01-01T$hhmm:00Z"))
+    val files = Seq(
+      Seq(1L -> "12:00", 2L -> "12:20"),
+      Seq(3L -> "12:40"),
+      // 7: at the lagged watermark; 8: between it and batch 2's own;
+      // 9: below it, in a window that closed at 12:05
+      Seq(7L -> "12:10", 8L -> "12:15", 9L -> "12:01"))
+    val dir = java.nio.file.Files.createTempDirectory("events_late").toString
+    val base = System.currentTimeMillis() - 100000L
+    files.zipWithIndex.foreach { case (rows, i) =>
+      val tmp = java.nio.file.Files.createTempDirectory("events_late_part").toString
+      rows.map { case (id, t) => (id, at(t), 1L, "click", 1.0) }
+        .toDF("event_id", "ts", "user_id", "event_type", "value")
+        .coalesce(1).write.mode("overwrite").parquet(tmp)
+      val part = new java.io.File(tmp).listFiles().filter(_.getName.endsWith(".parquet")).head
+      val dst = new java.io.File(s"$dir/part$i.parquet")
+      assert(part.renameTo(dst) && dst.setLastModified(base + i * 1000L))
+    }
+    def run(op: org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame,
+            mode: String) = {
+      val out = new java.util.concurrent.ConcurrentLinkedQueue[(Long, org.apache.spark.sql.Row)]()
+      val q = op(streaming.EventStream.readEventStream(spark, dir, Some(1)))
+        .writeStream.outputMode(mode)
+        .foreachBatch { (b: org.apache.spark.sql.DataFrame, id: Long) =>
+          b.collect().foreach(r => out.add(id -> r)); ()
+        }
+        .start()
+      try q.processAllAvailable() finally q.stop()
+      val prog = q.recentProgress.map(p => p.batchId -> p).toMap
+      assert(prog(1).eventTime.get("watermark") == "2024-01-01T12:10:00.000Z")
+      assert(prog(2).eventTime.get("watermark") == "2024-01-01T12:30:00.000Z")
+      import scala.jdk.CollectionConverters._
+      (out.asScala.collect { case (2L, r) => r }.toSeq,
+        prog(2).stateOperators.map(_.numRowsDroppedByWatermark).sum)
+    }
+    // row level: ts <= 12:10 is dropped (7 and 9), 8 is kept although
+    // it is below batch 2's own watermark
+    val (deduped, dedupDropped) = run(streaming.EventStream.dedupStream, "append")
+    assert(deduped.map(_.getAs[Long]("event_id")).toSet == Set(8L))
+    assert(dedupDropped == 2)
+    // window level: 7's window [12:10, 12:15) is still open at 12:10,
+    // so the late row is aggregated; 9's closed window is the one
+    // dropped group
+    val (windows, aggDropped) = run(streaming.EventStream.windowedAgg, "update")
+    val counts = windows.map(r =>
+      r.getStruct(0).getTimestamp(0) -> r.getAs[Long]("n_events")).toMap
+    assert(counts == Map(at("12:10") -> 1L, at("12:15") -> 1L))
+    assert(aggDropped == 1)
+  }
 }
